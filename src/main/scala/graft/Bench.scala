@@ -4,8 +4,6 @@ import java.util.Locale
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the query catalog against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{name:sec},"sf":…}`.
@@ -144,23 +142,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val timedRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // round-robin passes interleave 100+ distinct queries, so the
-      // compiled-codegen cache must hold the whole catalog's generated
-      // classes at once — the 100-entry default thrashes (every draw
-      // re-runs Janino for every stage, minutes of pure compilation
-      // per sweep). Static conf: must be set before the session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.EngineSession.fromEnv("graft-bench")
 
     // every execution's fingerprint, keyed "<dir-tag>:<name>" — warm,
     // timed, and rescue draws all append, so a flip in ANY draw is seen

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,43 +7,11 @@ object Verify {
     require(args.length == 2,
       s"usage: graft.Verify <sfDir> <outDir> (got ${args.length} args)")
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Invariance-axis hook: SPARK_GRAFT_MASTER lets the gate re-dump
-    // the catalog on a master local[n] can't emulate — local-cluster
-    // (real executor JVMs) is what the speculative-execution axis
-    // needs, since local mode never starts the speculation scheduler.
-    // The driver never sets it.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster"))
-      // the standalone worker forks executors via spark-class, which
-      // knows only the Spark assembly jars — graft classes ride in here
-      builder.config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path"))
-    // Invariance-axis hook: SPARK_GRAFT_EXTRA_CONFS="k=v;k=v" lets the
-    // invariance gate re-dump the catalog under execution configs a real
-    // cluster moves (codegen off, AQE off, autoBroadcastJoinThreshold=-1)
-    // without forking this main. The driver never sets it. Malformed
-    // entries fail loudly here: a silent MatchError (or a ';' inside a
-    // value splitting into garbage) would dump the catalog under NOT
-    // the axis being claimed.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach {
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.nonEmpty => builder.config(k, v)
-          case _ => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_EXTRA_CONFS entry '$kv' is not k=v (entries " +
-              "are ';'-separated, so neither keys nor values may " +
-              "contain ';')")
-        }
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER / SPARK_GRAFT_EXTRA_CONFS re-dump the catalog
+    // on another master (local-cluster for the speculation axis, since
+    // local mode never starts the speculation scheduler) or under
+    // another execution conf
+    val spark = graft.core.EngineSession.fromEnv("graft-verify")
     // Non-vacuity pin for the speculation axis: when the dump claims to
     // run under speculative execution, at least one speculative task
     // attempt must actually have launched — otherwise the "axis" dump

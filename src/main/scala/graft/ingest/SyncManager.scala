@@ -193,24 +193,6 @@ final class SyncManager(spark: SparkSession, source: Source,
           error = Some(e.toString))
     }
   }
-
-  /** Scheduled loop (T1): immediate first run, then FIXED-DELAY — the
-    * sleep starts AFTER each cycle completes, so the effective period
-    * is cycle-duration + interval (the reference's APScheduler cron
-    * trigger is fixed-RATE with coalesce; under its own semantics the
-    * two are observably equivalent, because a fixed-rate tick that
-    * lands mid-cycle is skipped either way — fixed-delay just never
-    * generates the tick it would have skipped). Deliberate: fixed-delay
-    * guarantees a full `intervalSeconds` of source/store quiet time
-    * between cycles regardless of how long a 100 TB cycle runs.
-    * Blocking — callers own the thread; `cycles` bounds it for tests.
-    */
-  def runLoop(intervalSeconds: Long, cycles: Int): Seq[SyncResult] =
-    (1 to cycles).map { i =>
-      val r = runCycle()
-      if (i < cycles) Thread.sleep(intervalSeconds * 1000)
-      r
-    }
 }
 
 object SyncManager {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables.fanOut
 import graft.functions.{SimHash64, TextFunctions, TextSketches}
 
 /** Deduplication operators for training-data pipelines, all expressed
@@ -296,44 +297,6 @@ object Dedup {
               size(array_union(col("set_a"), col("set_b")))))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "est_jaccard", "jaccard")
-  }
-
-  /** Compute-heavy per-row stages must not inherit a too-coarse source
-    * partitioning (one small parquet file = one task = one core doing
-    * all the hashing). The row shuffle is orders of magnitude cheaper
-    * than the per-row work it parallelizes.
-    *
-    * Round 19 (guide §2.4/§2.5): fires only when the source is
-    * genuinely NARROWER than the cluster (< defaultParallelism, not
-    * < 2×): a frame arriving at cluster width — e.g. Curation's
-    * persisted survivors cache, already partitioned by the dedup
-    * shuffle — was being re-exchanged 32→64 in THREE consumer subtrees
-    * (sig scan + both verify-set scans), each a full pass of survivor
-    * text through a shuffle that bought nothing (the executed d12
-    * interior plan showed three RoundRobinPartitioning(64) exchanges
-    * over the InMemoryTableScan). And when it does fire, it hash-
-    * partitions on the id column instead of round-robin: a keyless
-    * repartition(n) pays a local binary sort of every full-text row
-    * for retry determinism (spark.sql.execution.sortBeforeRepartition,
-    * guide §2.5); ids are unique, so the hash spread is uniform.
-    */
-  private def fanOut(df: DataFrame, idCol: String): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    // toRdd reads the physical partition count without inserting the
-    // row-deserializer node a `df.rdd` conversion adds. Precondition
-    // (round 19, ADVICE): callers pass a scan, an already-spread frame,
-    // or the curation cache — a construction-job probe verified none of
-    // them trigger eager stage materialization under AQE (see Q.fanOut's
-    // scaladoc for the hazard on exchange-bearing plans).
-    if (df.queryExecution.toRdd.getNumPartitions >= par) df
-    // Pinned at exactly cluster width (round 19, guide §2.2) — 1×, not
-    // the former 2× (the doubled width paid 2×cores fixed-overhead tasks
-    // per kernel stage), and deliberately NOT AQE-coalescible: an
-    // unpinned repartition was measured and AQE's byte-based coalescing
-    // serialized CPU-dense kernel consumers (d32's shingle explode went
-    // 1.1 s → 12 s on a 2-partition coalesce). Bytes cannot see per-row
-    // CPU; ids are unique so the hash spread is uniform.
-    else df.repartition(par, col(idCol))
   }
 
   /** Full MinHash-LSH near-dup pipeline over a text column.

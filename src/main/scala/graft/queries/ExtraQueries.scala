@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.core.Tables.fanOut
 import Q._
 
 /** Second ring of the relational surface: multidimensional aggregation
@@ -332,7 +333,7 @@ object ExtraQueries {
       (s, d) => {
         // fanOut on the groupBy key (round 18): the rev subtree runs
         // twice (scalar max + the filtered result) and both runs'
-        // partial aggregates were scan-fused single-task — see Q.fanOut.
+        // partial aggregates were scan-fused single-task — see Tables.fanOut.
         val rev = fanOut(t(s, d, "lineitem"), "l_suppkey")
           .groupBy(col("l_suppkey").as("supplier_no"))
           .agg(sum(dec(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4))
@@ -355,7 +356,7 @@ object ExtraQueries {
     // TPC-H Q18-shaped: large orders via IN over a grouped HAVING
     Q("q50_large_orders",
       (s, d) => {
-        // fanOut on the groupBy key (round 18) — see q10/Q.fanOut.
+        // fanOut on the groupBy key (round 18) — see q10/Tables.fanOut.
         val li = fanOut(t(s, d, "lineitem"), "l_orderkey")
         val big = li.groupBy("l_orderkey")
           .agg(dsum(col("l_quantity")).as("total_qty"))
@@ -375,7 +376,7 @@ object ExtraQueries {
 
     // schema-on-read JSON parsing (from_json → typed struct) + agg
     // fanOut (round 18): per-row JSON parsing fused into the
-    // single-task events scan — see Q.fanOut.
+    // single-task events scan — see Tables.fanOut.
     Q("q46_from_json",
       (s, d) => fanOut(t(s, d, "events"), "event_id")
         .withColumn("k",

@@ -28,53 +28,6 @@ final case class Q(
 object Q {
   def dec(c: Column, scale: Int): Column = c.cast(DecimalType(18, scale))
 
-  /** Scale-adaptive fan-out before a compute-heavy stage (round 18,
-    * guide §2.5 "input skew" / §1.2 "the distributed algorithm"): the
-    * driver's tables ship as ONE single-row-group parquet file per
-    * table, and a parquet row group is the scan's minimum split unit —
-    * so every scan-fused stage (decimal aggregation, HLL sketches,
-    * count-distinct Expand) runs on ONE core regardless of cluster
-    * width (measured: q05's whole 2.5 s was one task's partial
-    * aggregate; 31 cores idle). Same discipline as Dedup.fanOut: only
-    * when the source arrives with fewer partitions than the cluster
-    * can use — at production scale a 100 TB table scans as thousands
-    * of row-group splits and this is a structural no-op, so no plan
-    * change and no extra exchange is ever paid there.
-    *
-    * `keys` chooses HASH repartitioning (no map-side sort) over
-    * round-robin, which pays a full local sort of every input row for
-    * retry determinism (spark.sql.execution.sortBeforeRepartition,
-    * guide §2.5) — pass a high-cardinality column; results are
-    * value-identical either way because every catalog measure is
-    * decimal-exact / order-independent by design (see the header).
-    *
-    * PRECONDITION (round 19, ADVICE): call this only on a bare source
-    * (scan/cached frame, optionally projected/filtered). `toRdd` on a
-    * plan that contains an Exchange finalizes the adaptive plan, which
-    * under AQE can MATERIALIZE upstream shuffle stages whose work is
-    * then discarded when the real action re-plans. Every call site is
-    * a raw table load (verified round 19 with a construction-job probe:
-    * entry construction launches only the parquet footer job); keep it
-    * that way.
-    */
-  def fanOut(df: DataFrame, keys: String*): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    // Width = exactly the cluster width, explicitly pinned (round 19,
-    // guide §2.2). 1×, not the former 2×: the doubled width paid 2×cores
-    // fixed-overhead tasks in every consumer stage (measured: d10 at 32
-    // cores, 64-way 0.88 s vs narrower arms 0.65–0.70 s; the work itself
-    // is ~0.2 s). PINNED, not AQE-coalescible: an unpinned repartition
-    // was measured too and AQE's byte-based coalescing mis-sizes
-    // CPU-dense kernel consumers — it collapsed d32's 1.6 MB spread
-    // exchange to 2 partitions and ran the 8-token shingle explode
-    // serially (1.1 s → 12 s). Bytes cannot see per-row CPU; cluster
-    // width is the safe scale-adaptive choice, and the gate above makes
-    // this a structural no-op at production scan widths.
-    if (df.queryExecution.toRdd.getNumPartitions >= par) df
-    else if (keys.nonEmpty) df.repartition(par, keys.map(col): _*)
-    else df.repartition(par)
-  }
-
   /** Exact SUM of a 2-dp double measure, emitted as double. */
   def dsum(c: Column, scale: Int = 2): Column =
     sum(dec(c, scale)).cast("double")

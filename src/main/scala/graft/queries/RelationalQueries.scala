@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.core.Tables.fanOut
 import Q._
 
 /** The relational query surface from SURVEY.md §2.3–§2.8: the eight
@@ -361,7 +362,7 @@ object RelationalQueries {
     // ── the reference's built-in view (K3: v_inventory_summary,
     //    etl-service/src/sync.py:105-114), mapped onto lineitem ─────────
     // fanOut (round 18): five-measure decimal aggregate fused into the
-    // single-task scan — see Q.fanOut.
+    // single-task scan — see Tables.fanOut.
     Q("q26_summary_view",
       (s, d) => fanOut(t(s, d, "lineitem"), "l_orderkey").agg(
         count(lit(1)).as("total_items"),

@@ -17,28 +17,10 @@ object TextQueries {
   private def docs(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.load(s, d, "documents")
 
-  /** Single-file sources arrive as one input split; per-row-compute-
-    * heavy entries spread rows over the cluster first. CONDITIONAL
-    * (round 18): this used to be an unconditional repartition — at
-    * production scan widths (a 100 TB table arrives as thousands of
-    * row-group splits, already ≥ the cluster's parallelism) that is a
-    * gratuitous full-corpus round-robin exchange, each row paying the
-    * sort-before-repartition tax (guide §2.5), on every entry that
-    * spreads. Q.fanOut repartitions only when the source arrives
-    * narrower than the cluster can use — identical plan at the bench's
-    * single-row-group widths, a structural no-op at scale. Values are
-    * partition-width-invariant by construction (the check_invariance
-    * gate proves the whole catalog 107/107 across coprime widths).
-    */
+  /** Per-row-compute-heavy entries spread the single-split source over
+    * the cluster first (see Tables.fanOut). */
   private def spread(s: org.apache.spark.sql.SparkSession, d: String) =
-    // keyed on the unique doc_id (round 19, guide §2.5): a keyless
-    // repartition(n) pays a local binary sort of every FULL-TEXT row
-    // for retry determinism (spark.sql.execution.sortBeforeRepartition)
-    // before the exchange; hashing the unique id spreads identically
-    // with no sort. Values are partition-placement-invariant by
-    // construction (the invariance gate proves the catalog across
-    // coprime widths, which moves rows more than hash-vs-round-robin).
-    Q.fanOut(docs(s, d), "doc_id")
+    Tables.fanOut(docs(s, d), "doc_id")
 
   val all: Seq[Q] = Seq(
 

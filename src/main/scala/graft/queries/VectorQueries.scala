@@ -14,16 +14,10 @@ object VectorQueries {
   /** Paths already published by e06 in this JVM (build-once memo). */
   private val built = scala.collection.mutable.Set.empty[String]
 
+  /** Single-split source spread before per-row vector math (see
+    * Tables.fanOut). */
   private def emb(s: org.apache.spark.sql.SparkSession, d: String) =
-    // single-file source → spread before per-row vector math; Q.fanOut
-    // repartitions ONLY when the source arrives narrower than the
-    // cluster (round 18 — the unconditional form was a gratuitous
-    // full-corpus exchange at production scan widths; see
-    // TextQueries.spread)
-    // keyed on the unique vec_id (round 19): same no-sort rationale as
-    // TextQueries.spread — round-robin pays the sortBeforeRepartition
-    // local sort of every embedding row for retry determinism
-    Q.fanOut(Tables.load(s, d, "embeddings"), "vec_id")
+    Tables.fanOut(Tables.load(s, d, "embeddings"), "vec_id")
 
   val all: Seq[Q] = Seq(
 

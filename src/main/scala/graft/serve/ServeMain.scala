@@ -1,8 +1,6 @@
 package graft.serve
 
-import org.apache.spark.sql.SparkSession
-
-import graft.core.{EngineConfig, Tables}
+import graft.core.{EngineConfig, EngineSession, Tables}
 import graft.ingest.{ParquetSource, SyncManager}
 import graft.query.{QueryEngine, RateLimiter}
 import graft.snapshot.{SnapshotReader, SnapshotStore}
@@ -14,27 +12,19 @@ import graft.snapshot.{SnapshotReader, SnapshotStore}
   *
   * Env (reference parity, EngineConfig): TABLES_TO_SYNC,
   * SYNC_INTERVAL_SECONDS, SNAPSHOT_KEEP_COUNT, RATE_LIMIT_REQUESTS,
-  * HTTP_PORT, SOURCE_DIR, SNAPSHOT_DIR.
+  * HTTP_PORT, SOURCE_DIR, SNAPSHOT_DIR. Session (EngineSession):
+  * SPARK_GRAFT_MASTER, SPARK_GRAFT_CPUS, SPARK_GRAFT_EXTRA_CONFS.
   */
 object ServeMain {
   def main(args: Array[String]): Unit = {
     val cfg = EngineConfig.fromEnv()
     val tables = sys.env.get("TABLES_TO_SYNC")
       .map(_ => cfg.tablesToSync).getOrElse(Tables.all) // testdata default
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // FAIR across QueryEngine's per-request pools: concurrent HTTP
-      // queries share task slots instead of queueing FIFO behind the
-      // largest one (the reference serves through 2×CPU+1 workers)
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // FAIR (set by EngineSession) shares task slots across QueryEngine's
+    // per-request pools: concurrent HTTP queries do not queue FIFO
+    // behind the largest one (the reference serves through 2×CPU+1
+    // workers)
+    val spark = EngineSession.fromEnv("graft-serve", EngineSession.serving)
 
     val store = new SnapshotStore(spark, cfg.snapshotDir)
     val sync = new SyncManager(spark,
@@ -73,7 +63,12 @@ object ServeMain {
 
     @volatile var running = true
     val scheduler = new Thread(() => {
-      while (running) { // T1: immediate first run, fixed interval, 1-at-a-time
+      // T1: immediate first run, 1-at-a-time, then FIXED-DELAY: the
+      // sleep starts after each cycle, so the source and store get a
+      // full interval of quiet time however long a cycle runs (the
+      // reference's fixed-rate APScheduler trigger with coalesce skips
+      // a tick that lands mid-cycle, so the two are observably alike)
+      while (running) {
         val r = sync.runCycle()
         System.err.println(s"""{"sync":${r.success},"tables":${
           r.manifest.map(_.tables.size).getOrElse(0)},"pruned":${

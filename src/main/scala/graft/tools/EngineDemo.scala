@@ -2,8 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
+import graft.core.EngineSession
 import graft.ingest.{ParquetSource, SyncManager}
 import graft.query.QueryEngine
 import graft.snapshot.{SnapshotReader, SnapshotStore}
@@ -15,13 +14,7 @@ import graft.snapshot.{SnapshotReader, SnapshotStore}
 object EngineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession.build("graft-demo", "local[4]", 4)
 
     val snapRoot = Files.createTempDirectory("graft-demo").toString
     val store = new SnapshotStore(spark, snapRoot)

@@ -23,24 +23,10 @@ object SparkSpec {
     if (current == null || current.sparkContext.isStopped) {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
-      current = build()
+      // FAIR (set by EngineSession) lets HttpApiSpec exercise
+      // QueryEngine's per-request pools, as ServeMain does in production
+      current = graft.core.EngineSession.build("graft-test", "local[4]", 4)
     }
     current
-  }
-
-  private def build(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // FAIR scheduling so HttpApiSpec can exercise QueryEngine's
-      // per-request pools (ServeMain runs the same mode in production);
-      // batch suites are unaffected — they run one job at a time
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 }

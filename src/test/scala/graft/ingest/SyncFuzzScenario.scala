@@ -39,21 +39,11 @@ object SyncFuzzScenario {
   }
 
   /** The seed's dealt deck — the shuffle is the seed rng's FIRST
-    * consumption inside [[run]], so `deckFor(new Random(seed))` is a
-    * pure preview of what run(seed) will deal. Exposed (round 15) so
-    * seed hunts can bias deck SHAPES — decks ENDING on deploy (the
-    * 1408002 fenced-wake-up-after-final-prune shape) or STARTING with
-    * deploy (claim-at-boot against a near-empty store) — by scanning
-    * previews instead of running scenarios. Must remain the exact
-    * multiset + shuffle `run` deals from the same rng position.
-    */
-  def deckFor(rng: scala.util.Random): Seq[String] = deckFor(rng, Nil)
-
-  /** Deck with extra ops mixed into the shuffle. With `extra = Nil`
-    * this deals the EXACT historical deck for a given seed (same
-    * multiset, same rng consumption), so every pinned seed keeps its
-    * shape; extra ops (e.g. "midshift") are only ever dealt to NEW
-    * seeds that ask for them.
+    * consumption inside [[run]]. Extra ops are mixed into the shuffle;
+    * with `extra = Nil` this deals the EXACT historical deck for a
+    * given seed (same multiset, same rng consumption), so every pinned
+    * seed keeps its shape; extra ops (e.g. "midshift") are only ever
+    * dealt to NEW seeds that ask for them.
     */
   def deckFor(rng: scala.util.Random, extra: Seq[String]): Seq[String] =
     rng.shuffle(Seq.fill(8)("churn") ++ Seq.fill(2)("nochange") ++

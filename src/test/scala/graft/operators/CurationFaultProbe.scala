@@ -3,7 +3,7 @@ package graft.operators
 import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Fault-tolerance probe for the managed-persist paths, run in its OWN
   * JVM (see CurationFaultSpec): task retries need a `local[N, 2]`
@@ -38,13 +38,9 @@ object CurationFaultProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8, 2]") // 2 task attempts: one injected failure + retry
-      .appName("graft-fault-probe")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // local[8, 2]: 2 task attempts, one injected failure + retry
+    val spark = graft.core.EngineSession.build("graft-fault-probe",
+      "local[8, 2]", 8)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

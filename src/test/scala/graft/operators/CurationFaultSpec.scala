@@ -1,10 +1,5 @@
 package graft.operators
 
-import java.lang.management.ManagementFactory
-
-import scala.jdk.CollectionConverters._
-import scala.sys.process._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Launches [[CurationFaultProbe]] in a child JVM (task retries need a
@@ -16,26 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class CurationFaultSpec extends AnyFunSuite {
 
   test("managed persist recomputes, not corrupts, after an injected task failure") {
-    val java = System.getProperty("java.home") + "/bin/java"
-    // reuse this forked test JVM's module flags (build.sbt's add-opens
-    // list — Spark on JDK 17 needs them) by pairing each flag with its
-    // following value argument
-    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
-    val moduleFlags = jvmArgs.zipWithIndex.collect {
-      case (a, i) if a == "--add-opens" || a == "--add-exports" =>
-        Seq(a, jvmArgs(i + 1))
-      case (a, _) if a.startsWith("--add-opens=") ||
-          a.startsWith("--add-exports=") => Seq(a)
-    }.flatten
-    val cmd = Seq(java) ++ moduleFlags ++ Seq(
-      "-Xmx4g", "-Dspark.ui.enabled=false",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.operators.CurationFaultProbe")
-    val out = new StringBuilder
-    val code = Process(cmd).!(ProcessLogger(
-      l => out.append(l).append('\n'), l => out.append(l).append('\n')))
-    assert(code == 0, s"probe exited $code:\n${out.toString.takeRight(4000)}")
-    assert(out.toString.contains("FAULT_PROBE_OK"),
-      s"probe did not report OK:\n${out.toString.takeRight(4000)}")
+    val (code, out) = graft.tools.ForkedJvm.run(
+      "graft.operators.CurationFaultProbe", Nil, heap = "4g")
+    assert(code == 0, s"probe exited $code:\n${out.takeRight(4000)}")
+    assert(out.contains("FAULT_PROBE_OK"),
+      s"probe did not report OK:\n${out.takeRight(4000)}")
   }
 }

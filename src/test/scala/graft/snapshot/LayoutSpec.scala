@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Storage-layout capabilities: hive partitioning prunes at planning
-  * time; bucketing removes the shuffle from co-located joins. Both
-  * asserted on the PHYSICAL PLAN, not just results.
+  * time, and the published timestamp layout lets predicates push down.
+  * Both asserted on the PHYSICAL PLAN, not just results.
   */
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -96,26 +96,5 @@ class LayoutSpec extends SparkSpec {
     assert(results.map(_._2).distinct.size == 1,
       s"vintages served different data: $results")
     base.unpersist()
-  }
-
-  test("bucketed tables join without exchange") {
-    val facts = (1L to 1000L).map(i => (i, i * 2)).toDF("id", "a")
-    val dims = (1L to 1000L).map(i => (i, s"n$i")).toDF("id", "b")
-    BucketedTables.write(facts, "graft_bt_facts", "id", 4)
-    BucketedTables.write(dims, "graft_bt_dims", "id", 4)
-    try {
-      // disable broadcast so the join strategy decision is about
-      // bucketing, not size
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = BucketedTables.table(spark, "graft_bt_facts")
-        .join(BucketedTables.table(spark, "graft_bt_dims"), "id")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), plan.take(800))
-      assert(joined.count() == 1000)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      BucketedTables.drop(spark, "graft_bt_facts")
-      BucketedTables.drop(spark, "graft_bt_dims")
-    }
   }
 }

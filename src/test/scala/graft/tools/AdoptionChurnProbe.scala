@@ -9,7 +9,6 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 
 import graft.ingest.{ParquetSource, SyncManager}
 import graft.snapshot.{SnapshotReader, SnapshotStore}
@@ -41,13 +40,9 @@ object AdoptionChurnProbe {
     // heapWarm at 0 for short arg-driven runs, silently turning the
     // spec's growth check into a compare-against-zero
     val warmAt = math.max(1, iters / 10)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-adoption-churn-probe")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the serving conf, since this models ServeMain's adoption path
+    val spark = graft.core.EngineSession.build("graft-adoption-churn-probe",
+      "local[4]", 4, graft.core.EngineSession.serving)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

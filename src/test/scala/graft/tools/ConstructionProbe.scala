@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Does CONSTRUCTING a catalog entry's DataFrame launch Spark jobs
   * before any action runs? (round 19, ADVICE follow-up): `fanOut`
@@ -21,18 +20,7 @@ object ConstructionProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ConstructionProbe <sfDir> <name>...")
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.EngineSession.fromEnv("graft-construction-probe")
     val jobs = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.fuzz.StreamFuzz
@@ -20,12 +19,7 @@ import graft.streaming.EventStream
   */
 object DedupExpiryProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.EngineSession.build("graft-dedup-expiry-probe", "local[4]", 4)
     val us = 1000000L
     def ev(id: Long, tsSec: Long) =
       StreamFuzz.Ev(id, tsSec * us, 0L, "view", 0.0, "{}")

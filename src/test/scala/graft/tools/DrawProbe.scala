@@ -1,16 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Generic per-draw variance probe (round 15 — generalizes E08AbProbe's
-  * hooks for the d12 question): N timed draws of ONE catalog entry in a
-  * fresh JVM, with the same conf surface Bench uses, honoring
+/** Generic per-draw variance probe (round 15, for the d12 question):
+  * N timed draws of ONE catalog entry in a fresh JVM, with Bench's
+  * session (EngineSession, so SPARK_GRAFT_EXTRA_CONFS=k=v;… sets
+  * hypothesis-isolation confs, e.g. spark.sql.adaptive.enabled=false),
+  * honoring
   *
   *   SPARK_GRAFT_PROBE_PLANS=<dir>  dump every execution's FINAL
   *     adaptive plan, duration in the filename (diff slow vs fast)
-  *   SPARK_GRAFT_PROBE_CONFS=k=v;…  extra static confs (hypothesis
-  *     isolation, e.g. AQE off)
-  *   SPARK_GRAFT_AQE=false          the usual AQE kill-switch
   *
   * Why it exists: round 14 proved per-draw variance on identical code
   * can be a nondeterministic AQE plan flip, not noise (the e08
@@ -29,24 +26,7 @@ object DrawProbe {
     require(args.length >= 2, "usage: DrawProbe <queryName> <sfDir> [draws]")
     val Array(name, sfDir) = args.take(2)
     val draws = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_PROBE_CONFS").foreach {
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.EngineSession.fromEnv("graft-draw-probe")
 
     sys.env.get("SPARK_GRAFT_PROBE_PLANS").foreach { dir =>
       new java.io.File(dir).mkdirs()

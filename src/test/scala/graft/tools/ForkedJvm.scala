@@ -7,9 +7,10 @@ import scala.sys.process._
 
 /** Launches a probe main in a child JVM with a capped heap, inheriting
   * this JVM's --add-opens/--add-exports module flags and classpath.
-  * ONE copy shared by the memory-pressure and state-crossover specs so
-  * a future JVM-flag fix (tmpdir propagation, a new module export)
-  * lands in both instead of drifting between two pasted launchers.
+  * ONE copy shared by every spec that forks a probe, so a future
+  * JVM-flag fix (tmpdir propagation, a new module export) lands in all
+  * of them instead of drifting between pasted launchers. Session confs
+  * come from EngineSession inside the probe.
   */
 object ForkedJvm {
 
@@ -28,7 +29,6 @@ object ForkedJvm {
     }.flatten
     val cmd = Seq(java) ++ moduleFlags ++ Seq(s"-Xmx$heap") ++
       extraJvmFlags ++ Seq(
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         "-cp", System.getProperty("java.class.path"), mainClass) ++ args
     val out = new StringBuilder
     val code = Process(cmd, None, extraEnv: _*).!(ProcessLogger(

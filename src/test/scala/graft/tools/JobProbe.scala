@@ -3,7 +3,6 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB time attribution for one catalog entry (round 18, guide §1):
   * at bench scale (sf0.1 ≈ 17 MB) entry seconds are dominated by the
@@ -25,18 +24,7 @@ object JobProbe {
     require(args.length >= 2, "usage: JobProbe <queryName> <sfDir> [draws]")
     val Array(name, sfDir) = args.take(2)
     val draws = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.EngineSession.fromEnv("graft-job-probe")
 
     final case class JobRec(start: Long, var end: Long = 0L, desc: String)
     final case class StageRec(name: String, tasks: Int, taskMs: Long,

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.fuzz.StreamFuzz
@@ -14,12 +13,7 @@ import graft.streaming.EventStream
   */
 object JoinTieProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.EngineSession.build("graft-join-tie-probe", "local[4]", 4)
     val us = 1000000L
     def ev(id: Long, tsSec: Long, uid: Long, tpe: String) =
       StreamFuzz.Ev(id, tsSec * us, uid, tpe, 0.0, "{}")

@@ -152,43 +152,29 @@ object LocalClusterProbe {
     val sfDir = args(2)
     val entries = args.drop(3).toSeq
 
-    val builder = SparkSession.builder()
-      .master(master)
-      .appName("graft-local-cluster-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.streamingQueryListeners",
-        classOf[StateBackendEchoListener].getName)
-    if (master.startsWith("local-cluster") || master.startsWith("spark://")) {
-      // the worker forks executors through $SPARK_HOME/bin/spark-class,
-      // which knows only the Spark assembly jars — the graft classes
-      // (and this JVM's --add-opens flags, which spark-class supplies
-      // for Spark's own needs but not for scalatest-side extras) ride
-      // in via the executor extras
-      builder
-        .config("spark.executor.memory", "3g")
-        .config("spark.executor.extraClassPath",
-          System.getProperty("java.class.path"))
-    }
-    if (mode == "sync-spec" || mode == "sync-spec-kill") {
-      // aggressive speculation (core confs — must land before the
-      // context starts): ANY task slower than the fastest 5% duplicates
-      // after 20 ms. minTaskRuntime=0 and efficiency.enabled=false are
-      // both load-bearing: the defaults (100 ms floor; the 3.4+
-      // data-rate heuristic) suppress duration-only speculation at
-      // probe scale
-      builder
-        .config("spark.speculation", "true")
-        .config("spark.speculation.multiplier", "1.0")
-        .config("spark.speculation.quantile", "0.05")
-        .config("spark.speculation.interval", "20ms")
-        .config("spark.speculation.minTaskRuntime", "0ms")
-        .config("spark.speculation.efficiency.enabled", "false")
-    }
-    val spark = builder.getOrCreate()
+    // aggressive speculation (core confs — must land before the
+    // context starts): ANY task slower than the fastest 5% duplicates
+    // after 20 ms. minTaskRuntime=0 and efficiency.enabled=false are
+    // both load-bearing: the defaults (100 ms floor; the 3.4+
+    // data-rate heuristic) suppress duration-only speculation at
+    // probe scale
+    val speculation =
+      if (mode == "sync-spec" || mode == "sync-spec-kill") Seq(
+        "spark.speculation" -> "true",
+        "spark.speculation.multiplier" -> "1.0",
+        "spark.speculation.quantile" -> "0.05",
+        "spark.speculation.interval" -> "20ms",
+        "spark.speculation.minTaskRuntime" -> "0ms",
+        "spark.speculation.efficiency.enabled" -> "false")
+      else Nil
+    // 32 shuffle partitions whatever the master's slot count; the
+    // executor memory sizes the executor JVMs of cluster masters (local
+    // masters only check it against a floor)
+    val spark = graft.core.EngineSession.build("graft-local-cluster-probe",
+      master, 32,
+      Seq("spark.sql.streaming.streamingQueryListeners" ->
+        classOf[StateBackendEchoListener].getName,
+        "spark.executor.memory" -> "3g") ++ speculation)
     spark.sparkContext.setLogLevel("ERROR")
 
     mode match {

@@ -3,7 +3,7 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{functions => F, SparkSession}
+import org.apache.spark.sql.{functions => F}
 
 /** Memory-pressure probe, run in its OWN JVM with a deliberately tight
   * heap (see MemoryPressureSpec): executes the named catalog entries
@@ -45,15 +45,10 @@ object MemoryPressureProbe {
     require(args.length >= 2, "usage: MemoryPressureProbe <sfDir> <entry>...")
     val sfDir = args(0)
     val entries = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]") // bounded task concurrency: 8 slots share the pool
-      .appName("graft-memory-pressure-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // bounded task concurrency: 8 slots share the pool, over 32
+    // shuffle partitions
+    val spark = graft.core.EngineSession.build("graft-memory-pressure-probe",
+      "local[8]", 8, Seq("spark.sql.shuffle.partitions" -> "32"))
     spark.sparkContext.setLogLevel("ERROR")
     val mem = new MemMetrics
     spark.sparkContext.addSparkListener(mem)

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{functions => F, SparkSession}
+import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.EventStream
@@ -36,13 +36,8 @@ object StateCrossoverProbe {
     require(args.length == 2, "usage: StateCrossoverProbe <hdfs|rocksdb> <nKeys>")
     val provider = args(0)
     val nKeys = args(1).toLong
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-state-crossover-probe")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.EngineSession.build("graft-state-crossover-probe",
+      "local[8]", 8)
     provider match {
       case "hdfs" => // the default HDFSBackedStateStoreProvider
       case "rocksdb" =>
