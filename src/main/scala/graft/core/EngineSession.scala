@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   *  - a 10000-entry codegen cache: Bench's round-robin passes interleave
   *    100+ distinct queries, and the 100-entry default thrashes (every
   *    draw re-runs Janino for every stage). Static conf, so it must be
-  *    set before the session exists. Servers pass [[serving]] instead;
+  *    set before the session exists. Long-lived JVMs pass [[longLived]];
   *  - FAIR scheduling, so QueryEngine's per-request pools share task
   *    slots. Jobs without a pool property run in FAIR's default pool,
   *    which schedules FIFO, so batch mains (Bench, Verify) are unaffected;
@@ -94,13 +94,15 @@ object EngineSession {
               overrides: Seq[(String, String)] = Nil): SparkSession =
     build(appName, master(), width(), overrides)
 
-  /** Overrides for a serving process: Spark's default 100-entry codegen
-    * cache. A server adopts a fresh child session per snapshot
-    * generation and its queries compile fresh classes after each
-    * adoption, so a catalog-sized cache keeps every adoption's classes
-    * alive: AdoptionChurnProbe's used-after-GC heap grew 372 MiB over
-    * 1,800 adoptions at 10000 entries, 173 MiB at 100.
+  /** Overrides for a long-lived JVM that runs an open-ended stream of
+    * distinct queries (the server, the shared test session): Spark's
+    * default 100-entry codegen cache. A catalog-sized cache keeps every
+    * compiled class alive for the life of the JVM. A server adopts a
+    * fresh child session per snapshot generation and its queries
+    * compile fresh classes after each adoption: AdoptionChurnProbe's
+    * used-after-GC heap grew 372 MiB over 1,800 adoptions at 10000
+    * entries, 173 MiB at 100.
     */
-  val serving: Seq[(String, String)] =
+  val longLived: Seq[(String, String)] =
     Seq("spark.sql.codegen.cache.maxEntries" -> "100")
 }

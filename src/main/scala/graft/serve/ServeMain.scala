@@ -24,7 +24,7 @@ object ServeMain {
     // per-request pools: concurrent HTTP queries do not queue FIFO
     // behind the largest one (the reference serves through 2×CPU+1
     // workers)
-    val spark = EngineSession.fromEnv("graft-serve", EngineSession.serving)
+    val spark = EngineSession.fromEnv("graft-serve", EngineSession.longLived)
 
     val store = new SnapshotStore(spark, cfg.snapshotDir)
     val sync = new SyncManager(spark,

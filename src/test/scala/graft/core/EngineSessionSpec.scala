@@ -15,8 +15,11 @@ class EngineSessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(conf.get("spark.ui.enabled") == "false")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
-    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "10000")
+    // the shared session is long-lived; batch mains get the big cache
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "100")
     assert(spark.sparkContext.getSchedulingMode == SchedulingMode.FAIR)
+    assert(EngineSession.confs("local[4]", 4, Nil, Map.empty).toMap
+      .apply("spark.sql.codegen.cache.maxEntries") == "10000")
   }
 
   test("malformed SPARK_GRAFT_EXTRA_CONFS entries throw, naming the entry") {

@@ -42,7 +42,7 @@ object AdoptionChurnProbe {
     val warmAt = math.max(1, iters / 10)
     // the serving conf, since this models ServeMain's adoption path
     val spark = graft.core.EngineSession.build("graft-adoption-churn-probe",
-      "local[4]", 4, graft.core.EngineSession.serving)
+      "local[4]", 4, graft.core.EngineSession.longLived)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
