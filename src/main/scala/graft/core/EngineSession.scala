@@ -16,9 +16,9 @@ import org.apache.spark.sql.SparkSession
   *    100+ distinct queries, and the 100-entry default thrashes (every
   *    draw re-runs Janino for every stage). Static conf, so it must be
   *    set before the session exists. Long-lived JVMs pass [[longLived]];
-  *  - FAIR scheduling, so QueryEngine's per-request pools share task
-  *    slots. Jobs without a pool property run in FAIR's default pool,
-  *    which schedules FIFO, so batch mains (Bench, Verify) are unaffected;
+  *  - FAIR scheduling, one pool per serving thread in QueryEngine, so
+  *    concurrent requests share task slots. Jobs without a pool property
+  *    run in FAIR's default FIFO pool: Bench and Verify are unaffected;
   *  - on `local-cluster` / `spark://` masters, this JVM's classpath as
   *    the executor extraClassPath: the worker forks executors through
   *    spark-class, which knows only the Spark assembly jars.

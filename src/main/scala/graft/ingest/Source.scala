@@ -42,6 +42,10 @@ trait Source {
     * Watermarks travel as strings (ISO timestamp text): Catalyst casts
     * the literal to the column's type (TIMESTAMP or TIMESTAMP_NTZ), so
     * the contract is agnostic to which one the source surfaces.
+    *
+    * Unordered, unlike the reference's ORDER BY (database.py:83): no
+    * consumer reads the order, and in a Merge cycle a sort survives the
+    * upsert's Union as a sampling job plus a shuffle per table.
     */
   def readChangedSince(spark: SparkSession, table: String,
                        since: Option[String],
@@ -52,7 +56,6 @@ trait Source {
       case Some(c) => since match {
         case Some(ts) => df.filter(col(c) > lit(ts).cast(
           df.schema(c).dataType))
-          .orderBy(col(c)) // database.py:83 ORDER BY updated_at
         case None => df
       }
     }

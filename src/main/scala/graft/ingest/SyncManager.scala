@@ -30,8 +30,6 @@ sealed trait SyncMode
 object SyncMode {
   /** Reference semantics (T4): re-read every table whole each cycle. */
   case object FullRebuild extends SyncMode
-  /** Snapshot only the changed rows (a change-feed generation). */
-  case object IncrementalOnly extends SyncMode
   /** The scalable path and the reference's declared-but-unimplemented
     * intent (sync.py:141-142 "full table loads for simplicity"; the
     * design doc's MERGE): read ONLY the delta from the source and
@@ -46,11 +44,13 @@ object SyncMode {
   *
   *   extract → snapshot build → publish (manifest swap) → retention GC
   *
-  * Reference semantics preserved under the default SyncMode.FullRebuild
-  * (T4) while still probing and persisting the incremental watermark
-  * (T2/T3). Any failure logs and returns a failed result; the
-  * scheduler keeps ticking (T7). One cycle at a time (`synchronized` ≈
-  * APScheduler max_instances=1 + coalesce, T1).
+  * Two modes: the default SyncMode.FullRebuild keeps the reference
+  * semantics (T4) while still probing and persisting the incremental
+  * watermark (T2/T3); SyncMode.Merge reads only the delta past that
+  * watermark and upserts it into the previous generation. Any failure
+  * logs and returns a failed result; the scheduler keeps ticking (T7).
+  * One cycle at a time (`synchronized` ≈ APScheduler max_instances=1 +
+  * coalesce, T1).
   */
 final class SyncManager(spark: SparkSession, source: Source,
                         store: SnapshotStore, keepCount: Int = 24,
@@ -128,7 +128,6 @@ final class SyncManager(spark: SparkSession, source: Source,
       val frames = source.tableNames.map { t =>
         val df = mode match {
           case SyncMode.FullRebuild => source.read(spark, t)
-          case SyncMode.IncrementalOnly => deltas(t)
           case SyncMode.Merge =>
             prevManifest.filter(_.tables.contains(t)) match {
               case Some(m) =>

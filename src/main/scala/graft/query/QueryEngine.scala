@@ -1,6 +1,11 @@
 package graft.query
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{ScheduledThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import graft.model.QueryResult
 import graft.snapshot.SnapshotReader
@@ -75,48 +80,40 @@ final class QueryEngine(spark: SparkSession, reader: SnapshotReader,
       executionTimeMs = (System.nanoTime() - t0) / 1e6)
   }
 
-  /** Execution-time cap: the collect runs under a per-query job group;
-    * on timeout every job in the group is cancelled on the cluster (the
-    * work actually STOPS — a bare future timeout would leave executors
-    * burning) and the declared-contract timeout surfaces as 500-class.
+  /** Execution-time cap: the collect runs on the calling thread under a
+    * per-query job group. At the cap the shared timer cancels the
+    * group's jobs, and any the planner submits later (an AQE stage), on
+    * the cluster — the work actually STOPS — and the declared-contract
+    * timeout surfaces as 500-class.
+    *
+    * Under FAIR (set by EngineSession) the jobs run in a pool named
+    * after the serving thread, so a long query cannot serialize a fast
+    * one on another thread (the reference serves through 2×CPU+1
+    * workers). Spark never removes a pool: naming them per thread
+    * bounds them by the server's workers.
     */
-  private def collectWithTimeout(df: org.apache.spark.sql.DataFrame,
-                                 query: String): Array[org.apache.spark.sql.Row] = {
+  private def collectWithTimeout(df: DataFrame, query: String): Array[Row] = {
+    val sc = spark.sparkContext
     val groupId = s"graft-query-${java.util.UUID.randomUUID()}"
-    val executor = java.util.concurrent.Executors.newSingleThreadExecutor()
+    val timedOut = new AtomicBoolean(false)
+    val timer = QueryEngine.timer.schedule((() => {
+      timedOut.set(true)
+      sc.cancelJobGroupAndFutureJobs(groupId)
+    }): Runnable, maxExecutionSeconds.toLong, TimeUnit.SECONDS)
     try {
-      val fut = executor.submit(
-        new java.util.concurrent.Callable[Array[org.apache.spark.sql.Row]] {
-          def call(): Array[org.apache.spark.sql.Row] = {
-            spark.sparkContext.setJobGroup(groupId, query,
-              interruptOnCancel = true)
-            // concurrent-serving parity (the reference runs 2×CPU+1
-            // gunicorn workers): each request's jobs run in their own
-            // on-demand scheduler pool, so under
-            // spark.scheduler.mode=FAIR (set by ServeMain) a
-            // long-running query cannot monopolize the task slots and
-            // serialize a fast one behind it — pools share the
-            // cluster fairly at task granularity. Under the default
-            // FIFO mode the property is inert, so embedders that
-            // never serve concurrently pay nothing.
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", groupId)
-            try df.collect()
-            finally {
-              spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-              spark.sparkContext.clearJobGroup()
-            }
-          }
-        })
-      try fut.get(maxExecutionSeconds.toLong, java.util.concurrent.TimeUnit.SECONDS)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          spark.sparkContext.cancelJobGroup(groupId)
-          throw new QueryTimeoutException(
-            s"Query exceeded maximum execution time of ${maxExecutionSeconds}s")
-        case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause
-      }
-    } finally executor.shutdownNow()
+      sc.setJobGroup(groupId, query, interruptOnCancel = true)
+      sc.setLocalProperty("spark.scheduler.pool",
+        s"graft-serve-${Thread.currentThread.getName}")
+      df.collect()
+    } catch {
+      case NonFatal(e) if timedOut.get => throw new QueryTimeoutException(
+        s"Query exceeded maximum execution time of ${maxExecutionSeconds}s")
+        .initCause(e)
+    } finally {
+      timer.cancel(false)
+      sc.setLocalProperty("spark.scheduler.pool", null)
+      sc.clearJobGroup()
+    }
   }
 
   /** GET /schema equivalent (api-service/src/query_engine.py:151-165):
@@ -129,6 +126,18 @@ final class QueryEngine(spark: SparkSession, reader: SnapshotReader,
     reader.tableNames
       .map(t => t -> session.table(t).schema.fieldNames.toSeq).toMap
   }
+}
+
+object QueryEngine {
+  /** One JVM-wide daemon timer for every engine's cap. It only posts
+    * cancellations; a finished query's task is removed at once.
+    */
+  private val timer = new ScheduledThreadPoolExecutor(1, { (r: Runnable) =>
+    val t = new Thread(r, "graft-query-timer")
+    t.setDaemon(true)
+    t
+  })
+  timer.setRemoveOnCancelPolicy(true)
 }
 
 /** Per-client sliding-window rate limiter (reference

@@ -21,9 +21,9 @@ object ServeMain {
     val tables = sys.env.get("TABLES_TO_SYNC")
       .map(_ => cfg.tablesToSync).getOrElse(Tables.all) // testdata default
     // FAIR (set by EngineSession) shares task slots across QueryEngine's
-    // per-request pools: concurrent HTTP queries do not queue FIFO
-    // behind the largest one (the reference serves through 2×CPU+1
-    // workers)
+    // pools, one per HTTP worker thread: concurrent HTTP queries do not
+    // queue FIFO behind the largest one (the reference serves through
+    // 2×CPU+1 workers)
     val spark = EngineSession.fromEnv("graft-serve", EngineSession.longLived)
 
     val store = new SnapshotStore(spark, cfg.snapshotDir)

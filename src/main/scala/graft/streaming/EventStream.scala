@@ -330,6 +330,13 @@ object EventStream {
     * which at bench volume (~100 k events in one batch) is pure
     * overhead. Production sizing ties this to sustained input rate,
     * not to the batch session's shuffle width.
+    *
+    * The state-store provider comes from the SparkConf, which child
+    * sessions inherit (set it through SPARK_GRAFT_EXTRA_CONFS). MEASURED
+    * guidance (OPERATORS.md round-9 crossover table): the HDFS-backed
+    * default wins while state fits the executor heap, but it cannot
+    * spill and dies by OOM near ~1.4M live keys per heap-GiB, where
+    * RocksDB completes. Switch BEFORE state per executor nears heap.
     */
   def replaySession(spark: SparkSession, statePartitions: Int = 8): SparkSession = {
     val ss = spark.newSession()
@@ -349,26 +356,6 @@ object EventStream {
       case None => statePartitions
     }
     ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    // dev/bench hook: A/B the state-store backend without touching
-    // callers (e.g. org.apache.spark.sql.execution.streaming.state
-    // .RocksDBStateStoreProvider). MEASURED guidance (OPERATORS.md
-    // round-9 crossover table): the HDFS-backed default wins while
-    // state fits the executor heap (it held every sf10 A/B entry,
-    // 3-4x on interval joins), but its state is heap-resident and
-    // cannot spill — at ~720 B/key it dies by OOM once live keys
-    // approach ~1.4M per heap-GiB, where RocksDB (native memory +
-    // disk) completes the same load. Switch providers BEFORE state
-    // per executor approaches heap; it is a liveness cliff, not a
-    // perf trade, past that point.
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER").foreach(p =>
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass", p))
-    // companion hook for provider-specific knobs (e.g. RocksDB
-    // changelog checkpointing, which uploads deltas instead of
-    // snapshotting the full store every commit): "k=v;k=v"
-    sys.env.get("SPARK_GRAFT_STATE_CONF").foreach(_.split(';').foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) ss.conf.set(kv.take(i).trim, kv.drop(i + 1).trim)
-    })
     ss
   }
 

@@ -24,7 +24,7 @@ object SparkSpec {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
       // FAIR (set by EngineSession) lets HttpApiSpec exercise
-      // QueryEngine's per-request pools, as ServeMain does in production.
+      // QueryEngine's per-thread pools, as ServeMain does in production.
       // This JVM runs every suite's queries for the whole test run, so
       // it takes the long-lived codegen cache (a 10000-entry one would
       // keep the classes of thousands of distinct plans alive)

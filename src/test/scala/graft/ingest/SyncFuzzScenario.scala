@@ -567,7 +567,7 @@ object SyncFuzzScenario {
                 newEpochL = SyncManager.claimEpoch(store)
                 require(newEpochL > prevEpochL,
                   s"late claim $newEpochL not above live $prevEpochL")
-                val rNew = new SyncManager(spark, plainL, store,
+                val rNew = new SyncManager(this.spark, plainL, store,
                   mode = SyncMode.Merge, publisherEpoch = newEpochL)
                   .runCycle()
                 require(rNew.success,
@@ -643,7 +643,7 @@ object SyncFuzzScenario {
                 newEpochP = SyncManager.claimEpoch(store)
                 require(newEpochP > prevEpochP,
                   s"post-swap claim $newEpochP not above live $prevEpochP")
-                val rNew = new SyncManager(spark, plainP, store,
+                val rNew = new SyncManager(this.spark, plainP, store,
                   mode = SyncMode.Merge, publisherEpoch = newEpochP)
                   .runCycle()
                 require(rNew.success,

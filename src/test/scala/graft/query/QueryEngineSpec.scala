@@ -107,6 +107,26 @@ class QueryEngineSpec extends SparkSpec {
     assert(impatient.execute("SELECT * FROM t").rowCount == 1)
   }
 
+  test("scheduler pools are bounded by serving threads, not requests") {
+    // Spark never removes a FAIR pool, and every job in the process
+    // pays for each one the scheduler holds
+    val sc = spark.sparkContext
+    val q = "SELECT COUNT(*) FROM inventory"
+    val before = sc.getAllPools.size
+    (1 to 50).foreach(_ => assert(engine.execute(q).rowCount == 1))
+    val sequential = sc.getAllPools.size - before
+    assert(sequential <= 1, s"50 requests on one thread added $sequential pools")
+    val k = 4
+    val threads = java.util.concurrent.Executors.newFixedThreadPool(k)
+    val mid = sc.getAllPools.size
+    try {
+      (1 to 5 * k).map(_ => threads.submit[Long](() => engine.execute(q).rowCount))
+        .foreach(f => assert(f.get() == 1L))
+    } finally threads.shutdown()
+    val concurrent = sc.getAllPools.size - mid
+    assert(concurrent <= k, s"$k serving threads added $concurrent pools")
+  }
+
   test("PlanGuard rejects commands at parse time") {
     intercept[PlanGuard.WriteRejectedException] {
       PlanGuard.assertReadOnly(spark, "CREATE TABLE t (x INT)")

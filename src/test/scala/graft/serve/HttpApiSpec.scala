@@ -142,7 +142,8 @@ class HttpApiSpec extends SparkSpec {
       "/query?q=" + java.net.URLEncoder.encode(sql, "UTF-8"), Some(token()))
     // a long many-task job: 96 short tasks over 4 cores — under plain
     // FIFO the fast query's single task would queue behind all of
-    // them; under per-request FAIR pools it takes the next free slot.
+    // them; under FAIR pools (one per serving thread) it takes the next
+    // free slot.
     // (range() is admitted by the whitelist's COUNT prefix pattern —
     // the same de facto surface the reference's validator admits.)
     val slowSql = "SELECT COUNT(*) FROM range(0, 24000000000, 1, 96)"

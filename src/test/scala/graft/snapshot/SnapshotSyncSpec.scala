@@ -391,41 +391,6 @@ class SnapshotSyncSpec extends SparkSpec {
     assert(!new WatermarkStore(store).load().contains("inventory"))
   }
 
-  test("incremental mode snapshots only changed rows") {
-    val srcDir = Files.createTempDirectory("graft-incsrc").toString
-    val snapDir = Files.createTempDirectory("graft-incsnap").toString
-    def writeSource(rows: Seq[(Long, Long, Timestamp)]): Unit =
-      rows.toDF("id", "quantity", "updated_at")
-        .repartition(1)
-        .write.mode("overwrite").parquet(s"$srcDir/inventory.parquet")
-
-    writeSource(Seq(
-      (1L, 5L, ts("2024-01-01 00:00:00")),
-      (2L, 3L, ts("2024-01-02 00:00:00"))))
-    val store = new SnapshotStore(spark, snapDir)
-    val mgr = new SyncManager(spark,
-      new ParquetSource(srcDir, Seq("inventory")), store,
-      mode = SyncMode.IncrementalOnly)
-
-    // first cycle: no watermark yet → full extract
-    val r1 = mgr.runCycle(Instant.parse("2024-06-01T00:00:00Z"))
-    assert(r1.success, r1.error)
-    assert(r1.manifest.get.tables("inventory") == 2L)
-
-    // a new row lands after the watermark; cycle 2 captures ONLY it
-    writeSource(Seq(
-      (1L, 5L, ts("2024-01-01 00:00:00")),
-      (2L, 3L, ts("2024-01-02 00:00:00")),
-      (3L, 9L, ts("2024-01-05 00:00:00"))))
-    val r2 = mgr.runCycle(Instant.parse("2024-06-01T01:00:00Z"))
-    assert(r2.success, r2.error)
-    assert(r2.changedCounts("inventory") == 1L)
-    assert(r2.manifest.get.tables("inventory") == 1L)
-    val snap2 = spark.read.parquet(
-      store.tableDir(r2.manifest.get.version, "inventory").toString)
-    assert(snap2.select("id").as[Long].collect().toSeq == Seq(3L))
-  }
-
   test("merge mode upserts the delta into the previous generation") {
     val srcDir = Files.createTempDirectory("graft-mrgsrc").toString
     val snapDir = Files.createTempDirectory("graft-mrgsnap").toString

@@ -14,10 +14,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * counters on the HDFS-backed default). Registered through
   * `spark.sql.streaming.streamingQueryListeners` so it attaches to
   * every session in the probe JVM — including the child session
-  * `EventStream.replaySession` clones for the t-entries, whose SQLConf
-  * (where `SPARK_GRAFT_STATE_PROVIDER` lands) is invisible to the
-  * probe's parent session: reading the parent's conf would always
-  * report the default, proving nothing about the query that ran.
+  * `EventStream.replaySession` clones for the t-entries. Reading a
+  * session conf would only show what was asked for, not which backend
+  * the query that ran actually used.
   */
 class StateBackendEchoListener extends StreamingQueryListener {
   override def onQueryStarted(

@@ -199,18 +199,19 @@ class LocalClusterSpec extends AnyFunSuite {
       "graft.tools.LocalClusterProbe",
       Seq("local-cluster[2,4,4096]", "kill", sf, "t02_stream_sessions"),
       heap = "4g", extraEnv = clusterEnv :+
-        ("SPARK_GRAFT_STATE_PROVIDER" -> ("org.apache.spark.sql.execution" +
-          ".streaming.state.RocksDBStateStoreProvider")))
+        ("SPARK_GRAFT_EXTRA_CONFS" ->
+          ("spark.sql.streaming.stateStore.providerClass=org.apache.spark" +
+            ".sql.execution.streaming.state.RocksDBStateStoreProvider")))
     assert(code == 0 && out.contains("XCLUSTER_OK"),
       s"RocksDB executor-loss run failed:\n${out.takeRight(4000)}")
     assert(out.contains("removedDuringQuery=true"),
       s"the kill landed after the stream settled:\n${out.takeRight(2000)}")
     // the backend echo comes from the running query's state-operator
-    // metrics (rocksdb*-prefixed), NOT from any session conf — the
-    // env lands in the child session replaySession clones, whose conf
-    // the probe's parent session cannot see
+    // metrics (rocksdb*-prefixed), NOT from any session conf: it proves
+    // the SparkConf entry reached the child session replaySession
+    // clones, not merely the probe's parent session
     assert(out.contains("stateBackend=rocksdb"),
-      "the provider env did not reach the streaming query — the test " +
+      "the provider conf did not reach the streaming query — the test " +
         s"would be re-proving the default backend:\n${out.takeRight(2000)}")
     out.linesIterator.filter(_.startsWith("[xcluster]")).foreach(info(_))
   }

@@ -18,8 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * That pair of outcomes at the same key count IS the measured
   * crossover: between 300k and 6M keys/GiB-of-heap, the provider
-  * switch (`SPARK_GRAFT_STATE_PROVIDER`) stops being a perf trade and
-  * becomes a liveness requirement.
+  * switch (`spark.sql.streaming.stateStore.providerClass`) stops being
+  * a perf trade and becomes a liveness requirement.
   */
 class StateCrossoverSpec extends AnyFunSuite {
 
