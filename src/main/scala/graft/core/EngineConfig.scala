@@ -7,7 +7,6 @@ package graft.core
 final case class EngineConfig(
     tablesToSync: Seq[String],
     syncIntervalSeconds: Int,
-    batchSize: Int,
     keepCount: Int,
     refreshTtlSeconds: Int,
     rateLimitRequests: Int,
@@ -18,14 +17,13 @@ final case class EngineConfig(
 
 object EngineConfig {
   def fromEnv(env: Map[String, String] = sys.env): EngineConfig = EngineConfig(
-    // config.py:37-39 default table set; TABLES_TO_SYNC comma override
-    // (config.py:65-67)
+    // TABLES_TO_SYNC comma override (config.py:65-67); the default is
+    // the testdata table set (the reference's is config.py:37-39)
     tablesToSync = env.get("TABLES_TO_SYNC")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq("inventory", "products", "orders")),
+      .getOrElse(Tables.all),
     syncIntervalSeconds =
       env.get("SYNC_INTERVAL_SECONDS").map(_.toInt).getOrElse(60),
-    batchSize = env.get("BATCH_SIZE").map(_.toInt).getOrElse(10000),
     keepCount = env.get("SNAPSHOT_KEEP_COUNT").map(_.toInt).getOrElse(24),
     refreshTtlSeconds =
       env.get("SNAPSHOT_REFRESH_TTL_SECONDS").map(_.toInt).getOrElse(120),

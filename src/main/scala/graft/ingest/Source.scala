@@ -60,14 +60,6 @@ trait Source {
       }
     }
   }
-
-  /** S3: scalar watermark probe (MAX(updated_at), database.py:57-63). */
-  def maxWatermark(spark: SparkSession, table: String,
-                   watermarkCol: String = "updated_at"): Option[String] = {
-    val df = read(spark, table)
-    Source.resolve(df, watermarkCol).flatMap(c =>
-      Option(df.agg(max(col(c)).cast("string")).first().getString(0)))
-  }
 }
 
 object Source {
@@ -87,34 +79,6 @@ final class ParquetSource(dir: String, tables: Seq[String]) extends Source {
   def tableNames: Seq[String] = tables
   def read(spark: SparkSession, table: String): DataFrame =
     graft.core.Tables.load(spark, dir, table)
-}
-
-/** CSV source: `<dir>/<table>.csv` with header + schema inference.
-  * At scale, pass an explicit schema instead — inference scans twice.
-  */
-final class CsvSource(dir: String, tables: Seq[String],
-                      delimiter: String = ",") extends Source {
-  def tableNames: Seq[String] = tables
-  def read(spark: SparkSession, table: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("delimiter", delimiter)
-      .option("inferSchema", "true")
-      .csv(s"$dir/$table.csv")
-}
-
-/** ORC source: `<dir>/<table>.orc` (columnar alternative, built-in). */
-final class OrcSource(dir: String, tables: Seq[String]) extends Source {
-  def tableNames: Seq[String] = tables
-  def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.orc(s"$dir/$table.orc")
-}
-
-/** JSON-lines source: `<dir>/<table>.jsonl`. */
-final class JsonSource(dir: String, tables: Seq[String]) extends Source {
-  def tableNames: Seq[String] = tables
-  def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.json(s"$dir/$table.jsonl")
 }
 
 /** JDBC source — shape parity with the reference's extract path (S1:

@@ -45,12 +45,22 @@ object SyncMode {
   *   extract → snapshot build → publish (manifest swap) → retention GC
   *
   * Two modes: the default SyncMode.FullRebuild keeps the reference
-  * semantics (T4) while still probing and persisting the incremental
+  * semantics (T4) while still probing and recording the incremental
   * watermark (T2/T3); SyncMode.Merge reads only the delta past that
   * watermark and upserts it into the previous generation. Any failure
   * logs and returns a failed result; the scheduler keeps ticking (T7).
   * One cycle at a time (`synchronized` ≈ APScheduler max_instances=1 +
   * coalesce, T1).
+  *
+  * The publish is the only sync record: each table's watermark rides
+  * in the manifest that publishes the generation, as the metadata
+  * entry `watermark.<table>` (see [[SyncManager.watermarksOf]]). The
+  * reference keeps its watermarks in memory only (`self._state`,
+  * etl-service/src/sync.py:25) and loses them on restart; here they
+  * survive with the generation, advance exactly when the pointer swap
+  * lands, and a fenced publisher cannot move them. The cycle reads the
+  * pointer once, at entry: that read is the entry fence, the previous
+  * generation and the watermarks.
   */
 final class SyncManager(spark: SparkSession, source: Source,
                         store: SnapshotStore, keepCount: Int = 24,
@@ -61,10 +71,12 @@ final class SyncManager(spark: SparkSession, source: Source,
 
   private val writer = new SnapshotWriter(store, publisherEpoch)
   private val retention = new Retention(store, keepCount, publisherEpoch)
-  private val watermarks = new WatermarkStore(store)
 
   def runCycle(now: Instant = Instant.now()): SyncResult = synchronized {
     try {
+      // ONE pointer read at cycle entry supplies the fence, the
+      // previous generation and the watermarks.
+      val pointer = writer.readPointer()
       // cycle-entry fence (round 15): a retired instance's wake-up
       // must cost ONE pointer read. The r14 pre-write fence already
       // made it zero bytes written, but the per-table delta-scan stats
@@ -72,8 +84,33 @@ final class SyncManager(spark: SparkSession, source: Source,
       // stale tick. The publish-time checks remain for a successor
       // landing mid-cycle; this one just stops the known-stale case
       // before any source I/O.
-      writer.assertCurrentPublisher()
-      val state = watermarks.load()
+      writer.assertCurrentPublisher(pointer)
+
+      // A TORN publish pointer (a foreign non-rename writer
+      // mid-overwrite) must not wedge the publisher forever: treat
+      // garbage as absent — the watermarks it recorded are lost with
+      // it, so the delta scan reads every row, Merge degrades to a
+      // bootstrap full read for THIS cycle, and the publish at the end
+      // rewrites the pointer, self-healing both. Only parse-shaped
+      // failures qualify (Manifest.fromJson's strict validation raises
+      // MalformedManifest for bad JSON AND for valid JSON missing the
+      // required fields; anything else — an IO error, a genuine bug —
+      // propagates to the T7 fail-soft catch and retries next tick).
+      // Silently "healing" a transient store blip or a code bug with a
+      // full source re-read would be an expensive accident at 100 TB,
+      // so the heal is typed-narrow AND logged: the operator seeing a
+      // surprisingly expensive cycle can find its cause.
+      val prevManifest = pointer match {
+        case Right(m) => m
+        case Left(e) =>
+          SyncManager.warn(s"torn publish pointer at " +
+            s"${store.currentManifestPath} (${e.getMessage}); treating" +
+            " as absent — this cycle re-reads every source table in full" +
+            " and its publish rewrites the pointer")
+          None
+      }
+      val state =
+        prevManifest.map(SyncManager.watermarksOf).getOrElse(Map.empty)
 
       // change detection (S2+S3): ONE delta scan per table yields both
       // the changed count and the new watermark (max over the delta ==
@@ -101,30 +138,6 @@ final class SyncManager(spark: SparkSession, source: Source,
       }
       val changed = stats.map { case (t, (n, _)) => t -> n }
 
-      // snapshot build per mode. A TORN publish pointer (a foreign
-      // non-rename writer mid-overwrite) must not wedge the publisher
-      // forever: treat garbage as absent — Merge degrades to a
-      // bootstrap full read for THIS cycle and the publish at the end
-      // rewrites the pointer, self-healing it. Only parse-shaped
-      // failures qualify (Manifest.fromJson's strict validation raises
-      // MalformedManifest for bad JSON AND for valid JSON missing the
-      // required fields; anything else — an IO error, a genuine bug —
-      // propagates to the T7 fail-soft catch and retries next tick).
-      // Silently "healing" a transient store blip or a code bug with a
-      // full source re-read would be an expensive accident at 100 TB,
-      // so the heal is typed-narrow AND logged: the operator seeing a
-      // surprisingly expensive cycle can find its cause.
-      val prevManifest =
-        try store.readCurrentManifest()
-        catch {
-          case e: graft.model.MalformedManifest =>
-            System.err.println(
-              s"[sync] WARNING: torn publish pointer at " +
-                s"${store.currentManifestPath} (${e.getMessage}); treating" +
-                " as absent — this cycle bootstraps from a full source" +
-                " read and its publish rewrites the pointer")
-            None
-        }
       val frames = source.tableNames.map { t =>
         val df = mode match {
           case SyncMode.FullRebuild => source.read(spark, t)
@@ -174,15 +187,14 @@ final class SyncManager(spark: SparkSession, source: Source,
         t -> df
       }.toMap
 
+      // the watermarks ride in the manifest that publishes the
+      // generation, so they advance exactly when the pointer swap lands:
+      // a failed or fenced publish cannot skip (old, new] rows
+      val advances = SyncManager.recordable(
+        stats.collect { case (t, (_, Some(w))) => t -> w })
       val manifest = writer.publish(frames, now,
-        sortCol = Some(watermarkCol))
-
-      // watermarks advance ONLY after the publish landed — advancing
-      // first would permanently skip (old, new] rows if publish failed.
-      // One batched write for the whole cycle: N per-table round-trips
-      // would be N tiny rename windows against the store per cycle.
-      watermarks.updateAll(
-        stats.collect { case (t, (_, Some(w))) => t -> w }.toMap)
+        sortCol = Some(watermarkCol),
+        metadata = SyncManager.watermarkEntries(state ++ advances))
 
       val pruned = retention.prune()
       SyncResult(success = true, Some(manifest), changed, pruned)
@@ -195,6 +207,111 @@ final class SyncManager(spark: SparkSession, source: Source,
 }
 
 object SyncManager {
+  private def warn(what: String): Unit =
+    System.err.println(s"[sync] WARNING: $what")
+
+  private val WatermarkPrefix = "watermark."
+
+  /** The per-table watermarks a published manifest records, from its
+    * `watermark.<table>` metadata entries. Torn-state policy: a GARBAGE
+    * watermark is strictly worse than a LOST one. Garbage either
+    * wedges the publisher forever — the cycle fails at the delta scan
+    * (ANSI cast) and only a successful cycle rewrites the pointer — or,
+    * where the value casts to NULL, makes the strict-`>` delta
+    * predicate eternally false and silently skips every future row of
+    * that table. A lost watermark is merely expensive: the next delta
+    * scan degrades to a full table read whose stats re-establish it,
+    * and the publish records it again. So an entry no supported
+    * watermark column type can produce drops THAT entry, loudly
+    * logged, so an operator seeing a surprisingly expensive cycle can
+    * find its cause.
+    */
+  def watermarksOf(m: Manifest): Map[String, String] =
+    m.metadata.collect {
+      case (k, v) if k.startsWith(WatermarkPrefix) =>
+        k.stripPrefix(WatermarkPrefix) -> v
+    }.filter { case (t, v) =>
+      parseableWatermark(v) || {
+        warn(s"manifest ${m.version} records a watermark for '$t' that" +
+          s" no supported watermark column type can produce" +
+          s" (${v.take(48)}) — treating it as absent; the next cycle" +
+          " re-reads that table in full and its publish records it again")
+        false
+      }
+    }
+
+  private def watermarkEntries(
+      watermarks: Map[String, String]): Map[String, String] =
+    watermarks.map { case (t, v) => s"$WatermarkPrefix$t" -> v }
+
+  /** Save-side mirror of [[parseableWatermark]] (round 15): an advance
+    * the loader would drop must never be RECORDED in the first place —
+    * otherwise it ships, gets dropped on the next cycle with a
+    * "corruption" warning, and the table silently degrades to full
+    * re-reads. The one real producer is a FLOAT/DOUBLE watermark
+    * column containing NaN/Infinity (max() propagates NaN as the
+    * greatest value under Spark's ordering; recorded, it would make the
+    * strict-`>` delta predicate eternally FALSE and skip every future
+    * row). Refusing loudly keeps the PREVIOUS watermark: rows past it
+    * are re-read each cycle — correct and expensive, with this warning
+    * naming the cause every time — until the source value becomes
+    * finite again.
+    */
+  private def recordable(advances: Map[String, String]): Map[String, String] =
+    advances.filter { case (t, v) =>
+      parseableWatermark(v) || {
+        warn(s"advance for '$t' is not a round-trippable watermark" +
+          s" (${v.take(48)} — e.g. NaN/Infinity from a float column); NOT" +
+          " recorded — the previous watermark holds")
+        false
+      }
+    }
+
+  /** True iff the stored text is a shape the cycle can actually have
+    * recorded — i.e. `max(watermarkCol).cast("string")` over a SUPPORTED
+    * watermark column type. `readChangedSince` casts the literal back to
+    * the COLUMN's type, so the accepted set must cover every column type
+    * the delta contract supports, not just TIMESTAMP (round 14 — the
+    * timestamp-only check silently dropped legitimately-saved DATE and
+    * numeric/rowversion watermarks on every load, permanently degrading
+    * those tables to full re-reads each cycle while warning about
+    * corruption that never happened):
+    *  - TIMESTAMP / TIMESTAMP_NTZ: Spark's space-separated cast with
+    *    optional fraction, plus ISO-8601 `T`/offset forms for tolerance;
+    *  - DATE: `yyyy-MM-dd` (Spark's date→string cast);
+    *  - numeric (int/long/decimal version counters, rowversion): an
+    *    optionally-signed decimal literal. Bounded length so a garbage
+    *    blob of digits still heals rather than round-tripping.
+    *  - FLOAT/DOUBLE (round 15): Spark's double→string cast emits Java
+    *    `Double.toString` shapes — scientific notation ("1.2345678E7",
+    *    "1.0E-4") past the plain-decimal range — which the bare
+    *    NumericLiteral missed, so a legitimately-saved double watermark
+    *    was dropped on every load: the exact eternal-full-re-read
+    *    degradation the r14 DATE/numeric fix closed. The optional
+    *    bounded exponent suffix covers every FINITE double; the
+    *    NON-finite casts ("NaN", "Infinity") are refused at record time
+    *    instead (see [[recordable]]) — a NaN watermark would make the
+    *    strict-`>` delta predicate eternally false and silently skip
+    *    every future row, so it must never be recorded at all.
+    * Anything else cannot have come from a cycle and is dropped as
+    * garbage (see [[watermarksOf]]).
+    */
+  private[ingest] def parseableWatermark(s: String): Boolean =
+    scala.util.Try(java.sql.Timestamp.valueOf(s)).isSuccess ||
+      scala.util.Try(java.time.Instant.parse(s)).isSuccess ||
+      scala.util.Try(java.time.LocalDateTime.parse(s)).isSuccess ||
+      scala.util.Try(java.sql.Date.valueOf(s)).isSuccess ||
+      NumericLiteral.matches(s)
+
+  /** Optionally-signed decimal literal with an optional bounded
+    * exponent — the string cast of any numeric watermark column.
+    * 38 digits covers DECIMAL(38)'s full range; the `[eE]±ddd` suffix
+    * covers Java `Double.toString`'s scientific notation for every
+    * finite FLOAT/DOUBLE (exponents max out at 3 digits: |e| ≤ 324).
+    */
+  private val NumericLiteral =
+    "^-?[0-9]{1,38}(\\.[0-9]{1,38})?([eE][+-]?[0-9]{1,3})?$".r
+
   /** Claim a publisher epoch strictly greater than anything the store
     * has seen. Call ONCE at deployment boot and construct the
     * SyncManager with the result; the fence then guarantees that when

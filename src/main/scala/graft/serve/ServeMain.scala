@@ -1,6 +1,6 @@
 package graft.serve
 
-import graft.core.{EngineConfig, EngineSession, Tables}
+import graft.core.{EngineConfig, EngineSession}
 import graft.ingest.{ParquetSource, SyncManager}
 import graft.query.{QueryEngine, RateLimiter}
 import graft.snapshot.{SnapshotReader, SnapshotStore}
@@ -18,8 +18,6 @@ import graft.snapshot.{SnapshotReader, SnapshotStore}
 object ServeMain {
   def main(args: Array[String]): Unit = {
     val cfg = EngineConfig.fromEnv()
-    val tables = sys.env.get("TABLES_TO_SYNC")
-      .map(_ => cfg.tablesToSync).getOrElse(Tables.all) // testdata default
     // FAIR (set by EngineSession) shares task slots across QueryEngine's
     // pools, one per HTTP worker thread: concurrent HTTP queries do not
     // queue FIFO behind the largest one (the reference serves through
@@ -28,7 +26,7 @@ object ServeMain {
 
     val store = new SnapshotStore(spark, cfg.snapshotDir)
     val sync = new SyncManager(spark,
-      new ParquetSource(cfg.sourceDir, tables), store, cfg.keepCount)
+      new ParquetSource(cfg.sourceDir, cfg.tablesToSync), store, cfg.keepCount)
     val reader = new SnapshotReader(store,
       java.time.Duration.ofSeconds(cfg.refreshTtlSeconds))
     val engine = new QueryEngine(spark, reader)

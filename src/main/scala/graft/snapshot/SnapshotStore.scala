@@ -83,24 +83,24 @@ class SnapshotStore(val spark: SparkSession, val root: String) {
     m
   }
 
-  /** Size guard on the small-JSON reads (manifests, state files): a
-    * real manifest is a few KB; `readString` slurps the whole object,
-    * so a foreign writer scribbling gigabytes at the pointer path
-    * would OOM every reader and publisher that probes it — an outage
-    * where the torn-pointer taxonomy (degrade / 503 / heal) should
-    * apply instead. Checked from file status, before any bytes move.
+  /** Size guard on the manifest reads: a real manifest is a few KB;
+    * `readString` slurps the whole object, so a foreign writer
+    * scribbling gigabytes at the pointer path would OOM every reader
+    * and publisher that probes it — an outage where the torn-pointer
+    * taxonomy (degrade / 503 / heal) should apply instead. Checked
+    * from file status, before any bytes move.
     */
-  private[graft] def oversized(path: Path): Option[Long] =
+  private def oversized(path: Path): Option[Long] =
     if (!fs.exists(path)) None
     else Some(fs.getFileStatus(path).getLen)
-      .filter(_ > SnapshotStore.MaxStateFileBytes)
+      .filter(_ > SnapshotStore.MaxManifestBytes)
 
   private def readManifestAt(path: Path): Option[Manifest] = {
     oversized(path).foreach(len =>
       throw new graft.model.MalformedManifest(
         s"manifest at $path is $len bytes — far above the " +
-          s"${SnapshotStore.MaxStateFileBytes} byte cap for a state " +
-          "file; a foreign writer scribbled here, refusing to load it"))
+          s"${SnapshotStore.MaxManifestBytes} byte cap for a manifest;" +
+          " a foreign writer scribbled here, refusing to load it"))
     readString(path).map(s => validated(Manifest.fromJson(s)))
   }
 
@@ -148,10 +148,10 @@ object SnapshotStore {
   /** `keyFor`'s exact shape — the only version a writer produces. */
   private val GenKeyRe = "^[0-9]{8}_[0-9]{9}$".r
 
-  /** Manifests and state files are a few KB; 16 MiB is generous slack
-    * for any conceivable table count while still refusing a scribbled
-    * blob before it is slurped into driver memory. */
-  private[graft] val MaxStateFileBytes: Long = 16L * 1024 * 1024
+  /** Manifests are a few KB; 16 MiB is generous slack for any
+    * conceivable table count while still refusing a scribbled blob
+    * before it is slurped into driver memory. */
+  private val MaxManifestBytes: Long = 16L * 1024 * 1024
 
   /** Snapshot key format — reference s3_uploader.py:38 (ms added so
     * sub-second test cycles never collide). Lexicographic order ==

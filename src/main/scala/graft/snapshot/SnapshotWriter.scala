@@ -24,6 +24,13 @@ final class StalePublisherException(msg: String)
   *  2. write the per-generation manifest
   *  3. swap `current/manifest.json` — the atomic publish (T6)
   *
+  * The manifest's `metadata` is the publisher's progress record:
+  * SyncManager's per-table watermarks (`watermark.<table>`) and
+  * EventStream's `batch_id` ride in it, and readers ignore it. The
+  * swap publishes the record with the generation, so it advances
+  * exactly when the generation does and a fenced publisher cannot
+  * move it.
+  *
   * Scale notes: each table write is a distributed parquet job; callers
   * control partitioning (e.g. `df.repartition(n, $"id")` or
   * `sortWithinPartitions($"updated_at")` for min/max-stat pruning on
@@ -55,17 +62,10 @@ final class StalePublisherException(msg: String)
 final class SnapshotWriter(store: SnapshotStore,
                            publisherEpoch: Long = 0L) {
 
-  /** @param partitionBy per-table hive-style partition columns: the
-    *   snapshot directory gains `col=value/` subdirs and any query
-    *   filtering on them prunes whole directories at planning time
-    *   (PartitionFilters — the coarse-grained analog of the row-group
-    *   stats the sortCol provides).
-    */
   def publish(tables: Map[String, DataFrame],
               now: Instant = Instant.now(),
               sortCol: Option[String] = Some("updated_at"),
-              metadata: Map[String, String] = Map.empty,
-              partitionBy: Map[String, Seq[String]] = Map.empty): Manifest = {
+              metadata: Map[String, String] = Map.empty): Manifest = {
     val key = SnapshotStore.keyFor(now)
 
     // Published timestamps must be INT64 TIMESTAMP(MICROS), never the
@@ -79,14 +79,13 @@ final class SnapshotWriter(store: SnapshotStore,
     val prior = tables.headOption.map(_._2.sparkSession.conf.get(tsConf))
     tables.headOption.foreach(
       _._2.sparkSession.conf.set(tsConf, "TIMESTAMP_MICROS"))
-    try publishTables(tables, key, sortCol, partitionBy, now, metadata)
+    try publishTables(tables, key, sortCol, now, metadata)
     finally prior.foreach(v =>
       tables.head._2.sparkSession.conf.set(tsConf, v))
   }
 
   private def publishTables(tables: Map[String, DataFrame], key: String,
                             sortCol: Option[String],
-                            partitionBy: Map[String, Seq[String]],
                             now: Instant,
                             metadata: Map[String, String]): Manifest = {
     // the PRE-WRITE fence (round 14): a fenced instance must discover
@@ -124,10 +123,8 @@ final class SnapshotWriter(store: SnapshotStore,
       val sc = df.sparkSession.sparkContext
       val priorDesc = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(s"graft publish $name gen $key")
-      try partitionBy.get(name).filter(_.nonEmpty) match {
-        case Some(cols) => w.partitionBy(cols: _*).parquet(dir)
-        case None => w.parquet(dir)
-      } finally sc.setJobDescription(priorDesc)
+      try w.parquet(dir)
+      finally sc.setJobDescription(priorDesc)
       name -> obs.get("rows").asInstanceOf[Long]
     }
 
@@ -160,35 +157,35 @@ final class SnapshotWriter(store: SnapshotStore,
     manifest
   }
 
-  /** Cycle-entry fence (round 15, ADVICE): SyncManager calls this at
-    * the TOP of runCycle, BEFORE the per-table delta scans. The r14
-    * pre-write fence made a retired instance's wake-up cost zero bytes
-    * WRITTEN — but the cycle had already run one forced delta-scan job
-    * per table against the SOURCE by the time publish was called, so a
-    * fenced instance still charged the source N full delta reads per
-    * tick. With this check first, a retired wake-up costs exactly one
-    * pointer read. The two publish-time checks stay: this one cannot
-    * see a successor that lands mid-cycle.
+  /** The pointer as every fence reads it: the current manifest (None
+    * when absent), or the parse-shaped failure when it is torn. An IO
+    * error propagates to the cycle's T7 fail-soft.
     */
-  def assertCurrentPublisher(): Unit = fenceOrThrow(winner =>
-    s"refusing to run a sync cycle: this publisher's epoch" +
-      s" $publisherEpoch is older than the store's current epoch" +
-      s" $winner — a newer deployment owns this root; nothing was read" +
-      s" from the source or written. Retire this instance.")
+  def readPointer(): Either[MalformedManifest, Option[Manifest]] =
+    try Right(store.readCurrentManifest())
+    catch { case e: MalformedManifest => Left(e) }
 
-  /** The fence read: the current pointer's epoch, or — when the
-    * pointer is torn — the max epoch recorded anywhere in the store
-    * (generation manifests + claim markers cannot tear away with the
-    * pointer; healing blindly would let a foreign torn write over a
-    * higher-epoch manifest admit a stale swap). Strictly-greater wins;
-    * an IO error propagates to the cycle's T7 fail-soft. Called three
-    * times per cycle: at cycle entry (so a fenced wake-up costs one
-    * pointer read, zero source scans), before any table write (zero
-    * bytes written even when the successor landed mid-cycle), and
-    * immediately before the swap (the non-CAS window).
+  /** Cycle-entry fence (round 15, ADVICE): SyncManager calls this at
+    * the TOP of runCycle, BEFORE the per-table delta scans, on the one
+    * pointer read that also gives the cycle its previous generation and
+    * its watermarks. The r14 pre-write fence made a retired instance's
+    * wake-up cost zero bytes WRITTEN — but the cycle had already run
+    * one forced delta-scan job per table against the SOURCE by the time
+    * publish was called, so a fenced instance still charged the source
+    * N full delta reads per tick. With this check first, a retired
+    * wake-up costs exactly one pointer read. The two publish-time
+    * checks stay: this one cannot see a successor that lands mid-cycle.
     */
+  def assertCurrentPublisher(
+      pointer: Either[MalformedManifest, Option[Manifest]]): Unit =
+    fenceOrThrow(pointer)(winner =>
+      s"refusing to run a sync cycle: this publisher's epoch" +
+        s" $publisherEpoch is older than the store's current epoch" +
+        s" $winner — a newer deployment owns this root; nothing was read" +
+        s" from the source or written. Retire this instance.")
+
   private def fenceOrThrow(key: String, wrote: Boolean): Unit =
-    fenceOrThrow(winner =>
+    fenceOrThrow(readPointer())(winner =>
       if (wrote)
         s"refusing to publish generation $key: this publisher's epoch" +
           s" $publisherEpoch is older than the store's current epoch" +
@@ -201,10 +198,21 @@ final class SnapshotWriter(store: SnapshotStore,
           s" $winner — a newer deployment owns this root; nothing was" +
           s" written and the pointer is untouched. Retire this instance.")
 
-  private def fenceOrThrow(msg: Long => String): Unit = {
-    val currentEpoch =
-      try store.readCurrentManifest().map(_.publisherEpoch)
-      catch { case _: MalformedManifest => store.maxRecordedEpoch() }
+  /** The fence: the pointer's epoch, or — when the pointer is torn —
+    * the max epoch recorded anywhere in the store (generation
+    * manifests + claim markers cannot tear away with the pointer;
+    * healing blindly would let a foreign torn write over a
+    * higher-epoch manifest admit a stale swap). Strictly-greater wins.
+    * Applied three times per cycle: at cycle entry (so a fenced
+    * wake-up costs one pointer read, zero source scans), before any
+    * table write (zero bytes written even when the successor landed
+    * mid-cycle), and immediately before the swap (the non-CAS window).
+    */
+  private def fenceOrThrow(
+      pointer: Either[MalformedManifest, Option[Manifest]])(
+      msg: Long => String): Unit = {
+    val currentEpoch = pointer.fold(
+      _ => store.maxRecordedEpoch(), _.map(_.publisherEpoch))
     currentEpoch.filter(_ > publisherEpoch).foreach { winner =>
       throw new StalePublisherException(msg(winner))
     }

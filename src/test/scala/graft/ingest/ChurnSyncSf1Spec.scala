@@ -156,11 +156,11 @@ class ChurnSyncSf1Spec extends SparkSpec {
     }
 
     // ── no-change cycle: nothing moves ─────────────────────────────
-    val wmBefore = new WatermarkStore(store).load()("orders")
+    val wmBefore = StoredWatermarks(store)("orders")
     val r5 = manager().runCycle()
     assert(r5.success && r5.changedCounts("orders") == 0L,
       s"no-change cycle saw changes: $r5")
-    assert(new WatermarkStore(store).load()("orders") == wmBefore,
+    assert(StoredWatermarks(store)("orders") == wmBefore,
       "watermark moved on an empty delta")
 
     // ── drift cycle: the source gains a column mid-churn ───────────
@@ -224,7 +224,7 @@ class ChurnSyncSf1Spec extends SparkSpec {
     // must be a clear pre-publish diagnosis (not a mid-publish
     // AnalysisException), the watermark and current generation must
     // hold, and one FullRebuild cycle must recover
-    val wmDrift = new WatermarkStore(store).load()("orders")
+    val wmDrift = StoredWatermarks(store)("orders")
     val genDrift = store.readCurrentManifest().get.version
     val cur5 = spark.read.parquet(s"$srcDir/orders.parquet")
     replaceSource(srcDir,
@@ -237,7 +237,7 @@ class ChurnSyncSf1Spec extends SparkSpec {
     assert(rDrop.error.exists(e => e.contains("SchemaDrift") &&
         e.contains("o_custkey") && e.contains("FullRebuild")),
       s"drift error lacks the diagnosis: ${rDrop.error}")
-    assert(new WatermarkStore(store).load()("orders") == wmDrift,
+    assert(StoredWatermarks(store)("orders") == wmDrift,
       "watermark advanced past a failed drift cycle")
     assert(store.readCurrentManifest().get.version == genDrift,
       "a failed drift cycle published a generation")

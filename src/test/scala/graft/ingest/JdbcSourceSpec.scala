@@ -84,7 +84,7 @@ class JdbcSourceSpec extends SparkSpec {
     val mgr = new SyncManager(spark, src, store, mode = SyncMode.Merge)
     val r1 = mgr.runCycle(java.time.Instant.parse("2024-02-01T00:00:00Z"))
     assert(r1.success, r1.error)
-    assert(new WatermarkStore(store).load()("ditems") == "2024-01-03",
+    assert(StoredWatermarks(store)("ditems") == "2024-01-03",
       "DATE watermark not established from the folded-case JDBC column")
     // second cycle: the saved DATE literal rides the dialect WHERE —
     // strict >, zero changed rows, NOT a full-read bootstrap
@@ -96,14 +96,12 @@ class JdbcSourceSpec extends SparkSpec {
       "INSERT INTO ditems VALUES(4, DATE('2024-02-05'), 9.0)")
     val r3 = mgr.runCycle(java.time.Instant.parse("2024-02-01T02:00:00Z"))
     assert(r3.success && r3.changedCounts("ditems") == 1L, s"$r3")
-    assert(new WatermarkStore(store).load()("ditems") == "2024-02-05")
+    assert(StoredWatermarks(store)("ditems") == "2024-02-05")
     st.close(); c.close()
   }
 
   test("watermark probe and strict > incremental read work over JDBC") {
     val s = source()
-    val wm = s.maxWatermark(spark, "items")
-    assert(wm.nonEmpty)
     val delta = s.readChangedSince(spark, "items", Some("2024-01-20 00:00:00"))
     val all = s.read(spark, "items")
     import org.apache.spark.sql.functions._

@@ -97,7 +97,7 @@ object SyncFuzzScenario {
     var extraSeq = 0
     var churnCount = 0
     def ts(k: Int) = f"2030-01-${1 + k / 24}%02d ${k % 24}%02d:00:00"
-    def storedWm: String = new WatermarkStore(store).load()("orders")
+    def storedWm: String = StoredWatermarks(store).getOrElse("orders", "<none>")
 
     def archive(delta: DataFrame): Unit = {
       delta.write.parquet(s"$archDir/v$nVersions")
@@ -162,8 +162,11 @@ object SyncFuzzScenario {
       * A killer-armed cycle may instead fail soft (executor loss beyond
       * stage retry): then the watermark and pointer must have held and
       * the immediate retry must land the delta exactly once.
+      * `wmLost`: the pointer, and with it the watermark, is torn or
+      * absent, so the delta scan reads the whole source.
       */
-    def churnCycle(opIdx: Int, newCol: Option[String] = None): Unit = {
+    def churnCycle(opIdx: Int, newCol: Option[String] = None,
+                   wmLost: Boolean = false): Unit = {
       churnCount += 1
       val delta = makeDelta(opIdx, newCol)
       archive(delta)
@@ -172,6 +175,7 @@ object SyncFuzzScenario {
       replaceSource(source()
         .join(deltaDisk.select("id"), Seq("id"), "left_anti")
         .unionByName(deltaDisk, allowMissingColumns = true))
+      val expected = if (wmLost) source().count() else nDelta
       val wmBefore = storedWm
       // a torn/absent-op churn arrives with a garbage or missing
       // pointer BY DESIGN (runCycle heals it) — the pre-cycle snapshot
@@ -194,12 +198,12 @@ object SyncFuzzScenario {
           "a killed failed cycle moved the pointer")
         val r2 = mergeMgr().runCycle()
         require(r2.success, s"retry after the kill failed: ${r2.error}")
-        require(r2.changedCounts("orders") == nDelta,
-          s"retry consumed ${r2.changedCounts("orders")} of $nDelta")
+        require(r2.changedCounts("orders") == expected,
+          s"retry consumed ${r2.changedCounts("orders")} of $expected")
       } else {
         require(r.success, s"churn cycle failed: ${r.error}")
-        require(r.changedCounts("orders") == nDelta,
-          s"changed=${r.changedCounts("orders")} expected=$nDelta")
+        require(r.changedCounts("orders") == expected,
+          s"changed=${r.changedCounts("orders")} expected=$expected")
       }
       require(storedWm == ts(cycleIdx),
         s"watermark ${storedWm} != ${ts(cycleIdx)}")
@@ -342,7 +346,9 @@ object SyncFuzzScenario {
               "absent-op delete failed")
           }
           flushTies() // the bootstrap reads the full source
-          churnCycle(opIdx) // Merge degrades to bootstrap; publish heals
+          // Merge degrades to bootstrap, and the watermark went with the
+          // pointer: the delta scan reads every row; publish heals both
+          churnCycle(opIdx, wmLost = true)
           require(store.readCurrentManifest().nonEmpty,
             "publish did not heal the pointer")
 
@@ -604,18 +610,18 @@ object SyncFuzzScenario {
           // the POST-swap window (round 18, r17 verdict task 7): the
           // old cycle's publish SUCCEEDS — pointer swapped to its
           // generation — and the successor claims+publishes while the
-          // old cycle is still inside its post-swap tail (watermark
-          // write + retention GC). No fence can fire on the old cycle
-          // (its swap legitimately won); the hazard is the TAIL: a
+          // old cycle is still inside its post-swap tail (retention
+          // GC). No fence can fire on the old cycle (its swap
+          // legitimately won); the hazard is the TAIL: a
           // stale instance's GC whose notion of "old generations" can
           // include the generation its successor just published and
           // pointed at. Expected: the old cycle completes successfully,
           // its stale prune deletes NOTHING (Retention's higher-epoch
           // refusal), the successor's generation survives and stays
-          // served, the delta converges exactly once (both cycles read
-          // it — the watermark hadn't advanced at handover — and MERGE
-          // is idempotent), and the watermark lands at the delta's
-          // stamp. Injection is a delegating store whose pointer-swap
+          // served, the delta is consumed exactly once — by the old
+          // cycle, whose swap carried it together with its watermark,
+          // so the successor's delta scan finds nothing — and the
+          // watermark lands at the delta's stamp. Injection is a delegating store whose pointer-swap
           // write COMPLETES and then triggers the handover — the main
           // code path runs unmodified.
           val prevEpochP = epoch
@@ -636,8 +642,8 @@ object SyncFuzzScenario {
             override def writeString(p: org.apache.hadoop.fs.Path,
                                      content: String): Unit = {
               super.writeString(p, content)
-              // the old cycle's pointer swap has LANDED; its watermark
-              // write and retention prune are next
+              // the old cycle's pointer swap has LANDED; its retention
+              // prune is next
               if (p == currentManifestPath &&
                   firedP.compareAndSet(false, true)) {
                 newEpochP = SyncManager.claimEpoch(store)
@@ -668,8 +674,12 @@ object SyncFuzzScenario {
             s"generation count moved ${gensAfterSuccessorP} -> " +
               s"${store.listGenerations().size} across the old cycle's " +
               "post-swap tail — the stale instance deleted something")
-          require(landedP.contains(nDeltaP),
-            s"successor consumed $landedP of $nDeltaP delta rows")
+          require(rOldP.changedCounts("orders") == nDeltaP,
+            s"old cycle consumed ${rOldP.changedCounts("orders")} of " +
+              s"$nDeltaP delta rows")
+          require(landedP.contains(0L),
+            s"successor consumed $landedP delta rows — the old cycle's " +
+              "swap already carried the delta and its watermark")
           require(store.fs.exists(store.genDir(successorGenP)),
             "the successor's freshly-published generation is GONE — " +
               "deleted by the fenced old cycle's GC")

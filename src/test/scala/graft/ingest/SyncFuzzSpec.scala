@@ -24,8 +24,9 @@ import graft.SparkSpec
   *    watermark + pointer hold, one FullRebuild recovers;
   *  - retype: retyped column — same failure contract, then the source
   *    is reverted (the rolled-back-bad-deploy shape) and life goes on;
-  *  - torn/absent pointer: Merge degrades to a bootstrap full read and
-  *    its publish self-heals the pointer;
+  *  - torn/absent pointer: the watermark goes with it, so the delta
+  *    scan reads every row, Merge degrades to a bootstrap full read,
+  *    and its publish self-heals the pointer and the watermark;
   *  - failpub: the previous generation is damaged so the publish
   *    fails AFTER change detection — watermark and pointer must hold,
   *    the repaired retry must land the delta exactly once;
@@ -124,8 +125,7 @@ class SyncFuzzSpec extends SparkSpec {
 
   // post-swap handover decks (round 18, r17 verdict task 7): the old
   // cycle's swap legitimately WINS, and the successor lands while the
-  // old cycle is inside its post-swap tail (watermark write +
-  // retention GC) — the window where no fence can fire and the hazard
+  // old cycle is inside its post-swap tail (retention GC) — the window where no fence can fire and the hazard
   // is a stale instance's GC deleting the generation its successor
   // just published. Retention's higher-epoch refusal is the pinned
   // protection. Widen with GRAFT_SYNC_POSTSWAP_SEEDS=a,b,c

@@ -7,46 +7,37 @@ import java.time.Instant
 import org.apache.hadoop.fs.Path
 
 import graft.SparkSpec
+import graft.model.Manifest
 import graft.snapshot.SnapshotStore
 
-/** Torn-state policy for the durable watermark file (round 13). The
-  * file shares the publish pointer's threat model — tmp+rename writes,
-  * foreign non-rename writers, partial store failures — but a GARBAGE
-  * watermark is strictly worse than a lost one: the cycle either wedges
-  * forever (load fails every tick and only a successful cycle rewrites
-  * the file) or, where the garbage casts to NULL, the strict-`>` delta
-  * predicate goes eternally false and every future row of that table is
-  * silently skipped. The pinned policy mirrors the torn-pointer heal:
-  * parse-shaped corruption heals to ABSENT (the next cycle degrades to
-  * a full table read whose stats re-establish the watermark, and the
-  * publish rewrites the file), per-entry garbage drops only that entry,
-  * and IO errors propagate to the fail-soft catch (a store blip must
-  * not trigger a 100 TB re-read).
+/** Watermarks ride in the manifest that publishes each generation, as
+  * `watermark.<table>` metadata entries. A GARBAGE watermark is
+  * strictly worse than a LOST one: the cycle either wedges forever (the
+  * delta scan's cast fails every tick) or, where the garbage casts to
+  * NULL, the strict-`>` delta predicate goes eternally false and every
+  * future row of that table is silently skipped. So per-entry garbage
+  * drops only that entry (the next cycle re-reads the table in full and
+  * records it again), and a cycle never records a value it could not
+  * read back. The torn or absent pointer itself is pinned by
+  * SnapshotSyncSpec's torn-pointer rounds and ManifestSpec's strict
+  * parse.
   */
-class WatermarkStoreSpec extends SparkSpec {
+class WatermarkSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
   private def t(s: String) = Instant.parse(s)
 
-  private def freshEnv(): (String, SnapshotStore) = {
-    val srcDir = Files.createTempDirectory("graft-wm-src").toString
-    val snapDir = Files.createTempDirectory("graft-wm-snap").toString
-    Seq(
-      (1L, ts("2024-01-01 00:00:00"), 10.0),
-      (2L, ts("2024-01-02 00:00:00"), 20.0),
-      (3L, ts("2024-01-03 00:00:00"), 30.0))
-      .toDF("id", "updated_at", "v")
-      .write.mode("overwrite").parquet(s"$srcDir/witems.parquet")
-    (srcDir, new SnapshotStore(spark, snapDir))
-  }
+  /** The watermarks a manifest recording `state` yields after the
+    * pointer's JSON round-trip. */
+  private def roundTrip(state: Map[String, String]): Map[String, String] =
+    SyncManager.watermarksOf(Manifest.fromJson(Manifest.toJson(Manifest(
+      "20240101_000000000", "2024-01-01T00:00:00Z",
+      "history/20240101_000000000", Map.empty,
+      Map("engine" -> "seretlspark", "batch_id" -> "7") ++
+        state.map { case (k, v) => s"watermark.$k" -> v }))))
 
-  private def wmPath(store: SnapshotStore) =
-    new Path(store.rootPath, "state/watermarks.json")
-
-  test("save/load round-trips every format save can produce") {
-    val (_, store) = freshEnv()
-    val wm = new WatermarkStore(store)
+  test("every format a cycle can record round-trips through the manifest") {
     // every supported watermark column type's cast-to-string shape:
     // TIMESTAMP (space-separated, optional fraction), ISO tolerance
     // forms, DATE, and numeric version counters / rowversion (round 14
@@ -67,15 +58,14 @@ class WatermarkStoreSpec extends SparkSpec {
       "dbl_small" -> "1.0E-4",
       "dbl_neg" -> "-3.5E10",
       "dbl_max" -> "1.7976931348623157E308")
-    wm.save(state)
-    assert(wm.load() == state)
+    assert(roundTrip(state) == state)
   }
 
-  test("a non-timestamp watermark column keeps its watermark across load — no eternal full re-reads") {
+  test("a DATE watermark column stays incremental across cycles") {
     // end-to-end regression for the round-14 advice: a DATE (or
-    // numeric) watermark column's saved state must survive the next
+    // numeric) watermark column's recorded state must survive the next
     // cycle's load, so the delta scan stays incremental. Before the
-    // fix, load() dropped the entry and EVERY subsequent cycle did a
+    // fix, load dropped the entry and EVERY subsequent cycle did a
     // full table read while warning about corruption that never
     // happened.
     import org.apache.spark.sql.functions.{col, to_date}
@@ -94,8 +84,8 @@ class WatermarkStoreSpec extends SparkSpec {
       mode = SyncMode.Merge)
     val r1 = mgr.runCycle(t("2024-02-01T00:00:00Z"))
     assert(r1.success, r1.error)
-    assert(new WatermarkStore(store).load()("ditems") == "2024-01-03",
-      "DATE watermark was not persisted in the date cast shape")
+    assert(StoredWatermarks(store)("ditems") == "2024-01-03",
+      "DATE watermark was not recorded in the date cast shape")
     // the second cycle must be CHEAP: strict > on the loaded DATE
     // watermark, zero changed rows — not a full-read bootstrap
     val r2 = mgr.runCycle(t("2024-02-01T01:00:00Z"))
@@ -104,15 +94,15 @@ class WatermarkStoreSpec extends SparkSpec {
         s"full re-read: $r2")
   }
 
-  test("a DOUBLE watermark column round-trips in scientific notation; NaN is refused at save and never skips rows") {
+  test("a DOUBLE watermark round-trips; a NaN one is never recorded") {
     // r15 ADVICE: Spark's double→string cast emits Java Double.toString
     // shapes — "1.2345678E7" past the plain-decimal range — which the
     // bare NumericLiteral rejected, silently degrading a double
     // watermark to a full re-read every cycle. And the NON-finite casts
-    // must never be persisted at all: a stored "NaN" casts back to NaN,
+    // must never be recorded at all: a stored "NaN" casts back to NaN,
     // the strict-`>` delta predicate goes eternally false, and every
     // future row of the table is silently skipped — the worst failure
-    // class this store knows. Pinned end-to-end on a real sync.
+    // class the watermark knows. Pinned end-to-end on a real sync.
     val srcDir = Files.createTempDirectory("graft-wm-dbl-src").toString
     val snapDir = Files.createTempDirectory("graft-wm-dbl-snap").toString
     def seed(rows: Seq[(Long, Double, Double)]): Unit =
@@ -125,8 +115,8 @@ class WatermarkStoreSpec extends SparkSpec {
       mode = SyncMode.Merge)
     val r1 = mgr.runCycle(t("2024-02-01T00:00:00Z"))
     assert(r1.success, r1.error)
-    assert(new WatermarkStore(store).load()("fitems") == "1.2345678E7",
-      "double watermark not persisted in the Double.toString cast shape")
+    assert(StoredWatermarks(store)("fitems") == "1.2345678E7",
+      "double watermark not recorded in the Double.toString cast shape")
     // the loaded scientific-notation watermark keeps the cycle cheap
     val r2 = mgr.runCycle(t("2024-02-01T01:00:00Z"))
     assert(r2.success && r2.changedCounts("fitems") == 0L,
@@ -142,8 +132,8 @@ class WatermarkStoreSpec extends SparkSpec {
     assert(r3.changedCounts("fitems") == 1L,
       s"the NaN row must be visible to the strict-> delta scan " +
         s"(NaN is greatest under Spark ordering): $r3")
-    assert(new WatermarkStore(store).load()("fitems") == "1.2345678E7",
-      "a NaN watermark was persisted — it would make strict-> " +
+    assert(StoredWatermarks(store)("fitems") == "1.2345678E7",
+      "a NaN watermark was recorded — it would make strict-> " +
         "eternally false and silently skip every future row")
     // subsequent cycles RE-READ the NaN row (expensive + loud beats
     // silently skipped) and still refuse to advance onto it
@@ -156,7 +146,10 @@ class WatermarkStoreSpec extends SparkSpec {
     assert(snap.count() == 3L && snap.filter($"id" === 3L).count() == 1L)
   }
 
-  test("one store write per cycle: the batched advance replaces N per-table round-trips") {
+  test("a cycle writes only the generation manifest and the pointer") {
+    // the publish is the only sync record: the watermarks ride in the
+    // pointer the swap writes, so a cycle makes no store write of its
+    // own for them and there is no state file
     val srcDir = Files.createTempDirectory("graft-wm-batch-src").toString
     val snapDir = Files.createTempDirectory("graft-wm-batch-snap").toString
     Seq((1L, ts("2024-01-01 00:00:00"), 10.0),
@@ -167,10 +160,10 @@ class WatermarkStoreSpec extends SparkSpec {
         (2L, ts("2024-01-06 00:00:00"), 2.0))
       .toDF("id", "updated_at", "v")
       .write.mode("overwrite").parquet(s"$srcDir/wb.parquet")
-    val writes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
     val store = new SnapshotStore(spark, snapDir) {
       override def writeString(p: Path, content: String): Unit = {
-        if (p == wmPath(this)) writes.incrementAndGet()
+        writes.add(p)
         super.writeString(p, content)
       }
     }
@@ -179,23 +172,29 @@ class WatermarkStoreSpec extends SparkSpec {
       mode = SyncMode.Merge)
     val r1 = mgr.runCycle(t("2024-02-01T00:00:00Z"))
     assert(r1.success, r1.error)
-    assert(writes.get() == 1,
-      s"expected ONE watermark write for the 2-table cycle, got ${writes.get()}")
-    assert(new WatermarkStore(store).load() == Map(
-      "wa" -> "2024-01-02 00:00:00", "wb" -> "2024-01-06 00:00:00"))
-    // an all-empty-delta cycle advances nothing → touches the file not
-    // at all (an untouched file is one fewer torn-write window than a
-    // rewritten identical one)
+    val gen1 = new Path(store.genDir(r1.manifest.get.version), "manifest.json")
+    assert(writes.toArray.toSeq == Seq(gen1, store.currentManifestPath),
+      s"expected the generation manifest and the pointer, got $writes")
+    assert(!store.fs.exists(new Path(store.rootPath, "state")),
+      "a cycle left a state directory beside the snapshots")
+    val recorded = Map(
+      "watermark.wa" -> "2024-01-02 00:00:00",
+      "watermark.wb" -> "2024-01-06 00:00:00")
+    assert(recorded.toSet.subsetOf(
+      store.readCurrentManifest().get.metadata.toSet),
+      store.readCurrentManifest())
+    // an all-empty-delta cycle advances nothing and carries both
+    // watermarks forward into its own pointer
     val r2 = mgr.runCycle(t("2024-02-01T01:00:00Z"))
     assert(r2.success && r2.changedCounts.values.forall(_ == 0L), s"$r2")
-    assert(writes.get() == 1,
-      s"an empty-delta cycle rewrote the watermark file (${writes.get()} writes)")
+    assert(writes.size == 4, s"the second cycle wrote ${writes.size - 2} files")
+    assert(recorded.toSet.subsetOf(
+      store.readCurrentManifest().get.metadata.toSet),
+      "an empty-delta cycle dropped a watermark")
   }
 
-  test("property: every shape save can produce round-trips; shapes it cannot produce never do") {
+  test("property: recordable shapes round-trip; other shapes never do") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
-    val (_, store) = freshEnv()
-    val wm = new WatermarkStore(store)
     val pad2 = (n: Int) => f"$n%02d"
     // the string-cast images of the supported watermark column types
     val tsG = for {
@@ -222,23 +221,14 @@ class WatermarkStoreSpec extends SparkSpec {
       .suchThat(d => !d.isNaN && !d.isInfinite).map(_.toString)
     val goodG = Gen.oneOf(tsG, dateG, numG, dblG)
     val stateG = Gen.mapOf(Gen.zip(Gen.identifier.suchThat(_.nonEmpty), goodG))
-    val roundTrips = Prop.forAll(stateG) { state =>
-      wm.save(state); wm.load() == state
-    }
-    // shapes save cannot produce: any letter anywhere, a 39+-digit
+    val roundTrips = Prop.forAll(stateG)(state => roundTrip(state) == state)
+    // shapes a cycle cannot record: any letter anywhere, a 39+-digit
     // blob, empty — must drop (never silently feed the strict-> cast)
     val badG = Gen.oneOf(
       Gen.identifier.suchThat(s => s.exists(_.isLetter)),
       Gen.listOfN(45, Gen.numChar).map(_.mkString),
       Gen.const(""))
-    val drops = Prop.forAll(badG) { bad =>
-      wm.save(Map.empty)
-      store.writeString(
-        new Path(store.rootPath, "state/watermarks.json"),
-        s"""{"t": ${new com.fasterxml.jackson.databind.ObjectMapper()
-          .writeValueAsString(bad)}}""")
-      wm.load().isEmpty
-    }
+    val drops = Prop.forAll(badG)(bad => roundTrip(Map("t" -> bad)).isEmpty)
     Seq(roundTrips, drops).foreach { p =>
       val r = SCTest.check(
         SCTest.Parameters.default.withMinSuccessfulTests(120), p)
@@ -246,91 +236,47 @@ class WatermarkStoreSpec extends SparkSpec {
     }
   }
 
-  test("garbage shapes no supported column type can produce still drop") {
-    val (_, store) = freshEnv()
-    val wm = new WatermarkStore(store)
-    store.writeString(wmPath(store),
-      """{"good_num": "12345", "good_date": "2024-01-01",
-        |"blob": "9999999999999999999999999999999999999999999",
-        |"notanum": "12a45", "baddate": "2024-13-99",
-        |"empty": "", "text": "not a timestamp"}""".stripMargin)
-    assert(wm.load() == Map(
+  test("per-entry garbage in a manifest drops only that entry") {
+    assert(roundTrip(Map(
+      "good_num" -> "12345", "good_date" -> "2024-01-01",
+      "blob" -> "9999999999999999999999999999999999999999999",
+      "notanum" -> "12a45", "baddate" -> "2024-13-99",
+      "empty" -> "", "text" -> "not a timestamp")) == Map(
       "good_num" -> "12345", "good_date" -> "2024-01-01"),
       "a garbage shape round-tripped (or a legitimate one was dropped)")
-  }
 
-  test("a torn watermark file heals to absent; the cycle degrades to a full read and rewrites it") {
-    val (srcDir, store) = freshEnv()
+    // end-to-end: a pointer whose one watermark entry is garbage costs
+    // that table ONE full delta scan; the other table stays incremental
+    // and the publish records the dropped watermark again
+    val srcDir = Files.createTempDirectory("graft-wm-junk-src").toString
+    val snapDir = Files.createTempDirectory("graft-wm-junk-snap").toString
+    Seq((1L, ts("2024-01-01 00:00:00")), (2L, ts("2024-01-02 00:00:00")),
+        (3L, ts("2024-01-03 00:00:00")))
+      .toDF("id", "updated_at")
+      .write.mode("overwrite").parquet(s"$srcDir/ja.parquet")
+    Seq((1L, ts("2024-01-05 00:00:00")), (2L, ts("2024-01-06 00:00:00")))
+      .toDF("id", "updated_at")
+      .write.mode("overwrite").parquet(s"$srcDir/jb.parquet")
+    val store = new SnapshotStore(spark, snapDir)
     val mgr = new SyncManager(spark,
-      new ParquetSource(srcDir, Seq("witems")), store,
+      new ParquetSource(srcDir, Seq("ja", "jb")), store,
       mode = SyncMode.Merge)
     val r1 = mgr.runCycle(t("2024-02-01T00:00:00Z"))
     assert(r1.success, r1.error)
-    val healthy = new WatermarkStore(store).load()
-    assert(healthy("witems") == "2024-01-03 00:00:00", healthy)
+    val healthy = StoredWatermarks(store)
+    val m = store.readCurrentManifest().get
+    store.writeString(store.currentManifestPath, Manifest.toJson(
+      m.copy(metadata = m.metadata + ("watermark.ja" -> "not a timestamp"))))
+    assert(StoredWatermarks(store) == healthy - "ja")
 
-    // a foreign non-rename writer tears the file mid-overwrite
-    store.writeString(wmPath(store), """{"witems": "2024-01-0""")
-    assert(new WatermarkStore(store).load().isEmpty,
-      "torn watermark file did not heal to absent")
-
-    // the next cycle is EXPENSIVE but CORRECT: with no watermark the
-    // delta scan degrades to the full table (3 rows re-read, not 0),
-    // rows stay unique after the merge, and the publish's stats
-    // re-establish the watermark — the file is healed, no wedge
     val r2 = mgr.runCycle(t("2024-02-01T01:00:00Z"))
     assert(r2.success, r2.error)
-    assert(r2.changedCounts("witems") == 3L,
-      s"expected the full-read bootstrap, got ${r2.changedCounts}")
-    assert(new WatermarkStore(store).load() == healthy,
-      "the healing cycle did not rewrite the watermark file")
+    assert(r2.changedCounts == Map("ja" -> 3L, "jb" -> 0L),
+      s"expected one full scan of ja only, got ${r2.changedCounts}")
+    assert(StoredWatermarks(store) == healthy,
+      "the publish did not record the dropped watermark again")
     val snap = spark.read.parquet(
-      store.tableDir(r2.manifest.get.version, "witems").toString)
+      store.tableDir(r2.manifest.get.version, "ja").toString)
     assert(snap.count() == 3L && snap.select("id").distinct().count() == 3L)
-
-    // and the cycle after that is cheap again (strict > on the healed wm)
-    val r3 = mgr.runCycle(t("2024-02-01T02:00:00Z"))
-    assert(r3.success && r3.changedCounts("witems") == 0L, s"$r3")
-  }
-
-  test("valid-JSON garbage: non-object roots heal to absent; per-entry garbage drops only that entry") {
-    val (_, store) = freshEnv()
-    val wm = new WatermarkStore(store)
-    Seq("[1, 2]", "\"a string\"", "42", "null").foreach { root =>
-      store.writeString(wmPath(store), root)
-      assert(wm.load().isEmpty, s"root $root did not heal to absent")
-    }
-    // a numeric value, an empty string, a non-timestamp string, and a
-    // nested object are each garbage a NULL-casting predicate would
-    // silently starve on — dropped; the healthy entry survives
-    store.writeString(wmPath(store),
-      """{"good": "2024-01-03 00:00:00", "num": 17,
-        |"empty": "", "text": "not a timestamp",
-        |"nested": {"x": 1}}""".stripMargin)
-    assert(wm.load() == Map("good" -> "2024-01-03 00:00:00"))
-    // an oversized blob heals to absent from file status alone —
-    // never slurped into publisher memory
-    store.writeString(wmPath(store), "x" * (17 * 1024 * 1024))
-    assert(wm.load().isEmpty, "oversized state file did not heal")
-  }
-
-  test("an IO error propagates — a store blip must not trigger the full re-read") {
-    val (srcDir, store0) = freshEnv()
-    val store = new SnapshotStore(spark, store0.root) {
-      override def readString(p: Path): Option[String] =
-        if (p == wmPath(this))
-          throw new java.io.IOException("simulated store blip")
-        else super.readString(p)
-    }
-    intercept[java.io.IOException](new WatermarkStore(store).load())
-    // end-to-end: the cycle fails SOFT (T7) without publishing under a
-    // blank watermark state — pointer and store state untouched
-    val mgr = new SyncManager(spark,
-      new ParquetSource(srcDir, Seq("witems")), store,
-      mode = SyncMode.Merge)
-    val r = mgr.runCycle(t("2024-02-01T00:00:00Z"))
-    assert(!r.success && r.error.exists(_.contains("store blip")), s"$r")
-    assert(store.readCurrentManifest().isEmpty,
-      "a cycle that could not load its watermark state published anyway")
   }
 }

@@ -7,35 +7,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Storage-layout capabilities: hive partitioning prunes at planning
-  * time, and the published timestamp layout lets predicates push down.
-  * Both asserted on the PHYSICAL PLAN, not just results.
+/** Storage-layout capability: the published timestamp layout lets
+  * predicates push down, asserted on the parquet footer and the
+  * PHYSICAL PLAN, not just results.
   */
 class LayoutSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("partitioned snapshot: filters prune partition directories") {
-    val snapDir = Files.createTempDirectory("graft-lay").toString
-    val store = new SnapshotStore(spark, snapDir)
-    val events = Seq(
-      (1L, "2024-01-01", 1.0), (2L, "2024-01-01", 2.0),
-      (3L, "2024-01-02", 3.0), (4L, "2024-01-03", 4.0))
-      .toDF("event_id", "day", "value")
-    val m = new SnapshotWriter(store).publish(
-      Map("events_p" -> events), sortCol = None,
-      partitionBy = Map("events_p" -> Seq("day")))
-    assert(m.tables("events_p") == 4L)
-
-    val dir = store.tableDir(m.version, "events_p")
-    assert(store.fs.exists(new org.apache.hadoop.fs.Path(dir, "day=2024-01-01")))
-
-    val q = spark.read.parquet(dir.toString).filter(col("day") === "2024-01-02")
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      plan.contains("2024-01-02"), plan.take(600))
-    assert(q.count() == 1)
-  }
-
   test("published ts is INT64 micros with stats; predicates push down") {
     // the serving-path contract: whatever raw vintage events arrive in
     // (legacy int64 TIMESTAMP(NANOS) or native micros-NTZ), a PUBLISHED

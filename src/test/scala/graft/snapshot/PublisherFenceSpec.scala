@@ -7,7 +7,7 @@ import java.time.Instant
 import org.apache.hadoop.fs.Path
 
 import graft.SparkSpec
-import graft.ingest.{ParquetSource, SyncManager, SyncMode, WatermarkStore}
+import graft.ingest.{ParquetSource, StoredWatermarks, SyncManager, SyncMode}
 
 /** The single-publisher fence (r11 verdict item 1): the reference keeps
   * one publisher alive with APScheduler max_instances=1 inside ONE
@@ -174,7 +174,7 @@ class PublisherFenceSpec extends SparkSpec {
 
     // the old instance is still ticking and a delta has arrived
     addDelta(srcDir, 100L, "2024-03-01 00:00:00")
-    val wmBefore = new WatermarkStore(store).load()
+    val wmBefore = StoredWatermarks(store)
     val rStale = oldMgr.runCycle(t("2024-02-01T02:00:00Z"))
     assert(!rStale.success, "a stale publisher's cycle must fail soft")
     assert(rStale.error.exists(e => e.contains("StalePublisher") &&
@@ -184,7 +184,7 @@ class PublisherFenceSpec extends SparkSpec {
     val after = store.readCurrentManifest().get
     assert(after.version == served.version && after.publisherEpoch == 2L,
       s"pointer moved: ${served.version} -> ${after.version}")
-    assert(new WatermarkStore(store).load() == wmBefore,
+    assert(StoredWatermarks(store) == wmBefore,
       "a fenced-off publish advanced the watermark")
     // the pre-write fence (round 14): the fenced wake-up wrote NOTHING
     // — before it, the stale attempt built a full generation just to

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import java.time.Instant
 
 import graft.SparkSpec
-import graft.ingest.{ParquetSource, SyncManager, SyncMode, WatermarkStore}
+import graft.ingest.{ParquetSource, StoredWatermarks, SyncManager, SyncMode}
 
 /** End-to-end sync cycle over a temp source dir (SURVEY.md §3.2 / §5.2):
   * extract → snapshot publish → manifest swap → retention; watermark
@@ -51,7 +51,7 @@ class SnapshotSyncSpec extends SparkSpec {
   test("watermarks persisted and change detection is strict >") {
     val (mgr, store) = newManager()
     mgr.runCycle(Instant.parse("2024-02-01T01:00:00Z"))
-    val wm = new WatermarkStore(store).load()
+    val wm = StoredWatermarks(store)
     assert(wm("inventory").startsWith("2024-01-03 00:00:00"))
     assert(wm("products").startsWith("2024-01-02 12:00:00"))
     // second cycle: nothing changed since the watermark (strict >)
@@ -388,7 +388,7 @@ class SnapshotSyncSpec extends SparkSpec {
     assert(spark.read.parquet(store.tableDir(key, "inventory").toString)
       .count() == 1, "table data must complete BEFORE the pointer swap")
     // watermark must hold too — the failed cycle is fully retryable
-    assert(!new WatermarkStore(store).load().contains("inventory"))
+    assert(!StoredWatermarks(store).contains("inventory"))
   }
 
   test("merge mode upserts the delta into the previous generation") {
@@ -499,7 +499,7 @@ class SnapshotSyncSpec extends SparkSpec {
       new ParquetSource(srcDir, Seq("inventory")), store,
       mode = SyncMode.Merge)
     assert(mgr.runCycle(Instant.parse("2024-07-01T00:00:00Z")).success)
-    val wm1 = new WatermarkStore(store).load()("inventory")
+    val wm1 = StoredWatermarks(store)("inventory")
     val gen1 = store.readCurrentManifest().get.version
 
     // the source drops `quantity` (and bumps a row so the delta is
@@ -512,7 +512,7 @@ class SnapshotSyncSpec extends SparkSpec {
     assert(rDrop.error.exists(e => e.contains("SchemaDrift") &&
         e.contains("quantity") && e.contains("FullRebuild")),
       s"drift error lacks the diagnosis: ${rDrop.error}")
-    assert(new WatermarkStore(store).load()("inventory") == wm1,
+    assert(StoredWatermarks(store)("inventory") == wm1,
       "watermark advanced past a failed drift cycle")
     assert(store.readCurrentManifest().get.version == gen1,
       "a failed drift cycle published a generation")
@@ -562,7 +562,7 @@ class SnapshotSyncSpec extends SparkSpec {
       mode = SyncMode.Merge)
     val r1 = mgr.runCycle(Instant.parse("2024-07-01T00:00:00Z"))
     assert(r1.success)
-    val wm1 = new WatermarkStore(store).load()("inventory")
+    val wm1 = StoredWatermarks(store)("inventory")
 
     // a new row arrives; then the previous generation is damaged so the
     // MERGE's publish phase fails AFTER change detection computed the
@@ -577,7 +577,7 @@ class SnapshotSyncSpec extends SparkSpec {
     assert(fs.rename(gen1Table, aside))
     val r2 = mgr.runCycle(Instant.parse("2024-07-01T01:00:00Z"))
     assert(!r2.success, "publish should have failed against the damaged prev")
-    assert(new WatermarkStore(store).load()("inventory") == wm1,
+    assert(StoredWatermarks(store)("inventory") == wm1,
       "watermark advanced past a FAILED publish — rows in (old, new] " +
         "would be skipped forever")
 
@@ -611,7 +611,7 @@ class SnapshotSyncSpec extends SparkSpec {
       mode = SyncMode.Merge)
     val r1 = merge().runCycle(Instant.parse("2024-12-01T00:00:00Z"))
     assert(r1.success, r1.error)
-    val wm1 = new WatermarkStore(store).load()("inventory")
+    val wm1 = StoredWatermarks(store)("inventory")
 
     // the source loses `id` (and bumps a row so the delta is non-empty)
     spark.read.parquet(s"$srcDir/inventory.parquet")
@@ -628,7 +628,7 @@ class SnapshotSyncSpec extends SparkSpec {
     assert(rDrop.error.exists(e => e.contains("SchemaDrift") &&
       e.contains("id") && e.contains("FullRebuild")),
       s"key-loss error lacks the diagnosis: ${rDrop.error}")
-    assert(new WatermarkStore(store).load()("inventory") == wm1,
+    assert(StoredWatermarks(store)("inventory") == wm1,
       "watermark moved on a key-loss failure")
     assert(store.readCurrentManifest().get.version == r1.manifest.get.version,
       "a failed key-loss cycle published")
@@ -674,7 +674,7 @@ class SnapshotSyncSpec extends SparkSpec {
 
     val r1 = mgrOn(store).runCycle(Instant.parse("2024-10-01T00:00:00Z"))
     assert(r1.success, r1.error)
-    val wm1 = new WatermarkStore(store).load()("inventory")
+    val wm1 = StoredWatermarks(store)("inventory")
 
     // ── round 1: valid JSON, missing required field — heals ────────
     store.writeString(store.currentManifestPath,
@@ -711,7 +711,7 @@ class SnapshotSyncSpec extends SparkSpec {
     assert(store.listGenerations() == gensBefore,
       "a failed cycle published a generation (bootstrap full read " +
         "happened despite the bug)")
-    assert(new WatermarkStore(store).load()("inventory") == wm1,
+    assert(StoredWatermarks(store)("inventory") == wm1,
       "watermark moved on a failed cycle")
 
     // ── round 4: injected IOException (a store blip) — fail-soft ───
@@ -728,40 +728,6 @@ class SnapshotSyncSpec extends SparkSpec {
     assert(r6.success, r6.error)
     assert(store.readCurrentManifest().get.version ==
       r6.manifest.get.version)
-  }
-
-  test("csv and json sources feed the same sync pipeline") {
-    import graft.ingest.{CsvSource, JsonSource}
-    val srcDir = Files.createTempDirectory("graft-fmt").toString
-    val snapDir = Files.createTempDirectory("graft-fmtsnap").toString
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$srcDir/inventory.csv"),
-      "id,quantity,updated_at\n1,5,2024-01-01 00:00:00\n2,3,2024-01-02 00:00:00\n")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$srcDir/products.jsonl"),
-      """{"id": 1, "updated_at": "2024-01-01 12:00:00"}""" + "\n" +
-        """{"id": 2, "updated_at": "2024-01-03 12:00:00"}""" + "\n")
-    val store = new SnapshotStore(spark, snapDir)
-    val csvR = new SyncManager(spark,
-      new CsvSource(srcDir, Seq("inventory")), store).runCycle(
-      Instant.parse("2024-08-01T00:00:00Z"))
-    assert(csvR.success, csvR.error)
-    assert(csvR.manifest.get.tables("inventory") == 2L)
-    val jsonR = new SyncManager(spark,
-      new JsonSource(srcDir, Seq("products")), store).runCycle(
-      Instant.parse("2024-08-01T01:00:00Z"))
-    assert(jsonR.success, jsonR.error)
-    assert(jsonR.manifest.get.tables("products") == 2L)
-
-    import graft.ingest.OrcSource
-    Seq((1L, ts("2024-01-01 00:00:00")), (2L, ts("2024-01-02 00:00:00")))
-      .toDF("id", "updated_at")
-      .write.mode("overwrite").orc(s"$srcDir/ledger.orc")
-    val orcR = new SyncManager(spark,
-      new OrcSource(srcDir, Seq("ledger")), store).runCycle(
-      Instant.parse("2024-08-01T02:00:00Z"))
-    assert(orcR.success, orcR.error)
-    assert(orcR.manifest.get.tables("ledger") == 2L)
   }
 
   test("source describe exposes (name, type, nullable) for file sources") {

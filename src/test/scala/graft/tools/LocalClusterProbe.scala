@@ -242,7 +242,7 @@ object LocalClusterProbe {
         // untouched and the next tick publishes the delta cleanly.
         require(master.startsWith("local-cluster"),
           "sync-kill mode needs real executor JVMs")
-        import graft.ingest.{ParquetSource, SyncManager, SyncMode, WatermarkStore}
+        import graft.ingest.{ParquetSource, StoredWatermarks, SyncManager, SyncMode}
         import graft.snapshot.SnapshotStore
         val srcDir = java.nio.file.Files
           .createTempDirectory("graft-xsync-src").toString
@@ -263,7 +263,7 @@ object LocalClusterProbe {
         val r1 = manager().runCycle()
         require(r1.success, s"bootstrap cycle failed: ${r1.error}")
         val gen1 = r1.manifest.get.version
-        val wm1 = new WatermarkStore(store).load()("orders")
+        val wm1 = StoredWatermarks(store)("orders")
         val n0 = r1.manifest.get.tables("orders")
 
         // delta: bump a third of the rows past the watermark
@@ -357,7 +357,7 @@ object LocalClusterProbe {
           // failed soft: pointer + watermark untouched, retry publishes
           require(cm.version == gen1,
             s"failed cycle moved the pointer: ${cm.version} vs $gen1")
-          require(new WatermarkStore(store).load()("orders") == wm1,
+          require(StoredWatermarks(store)("orders") == wm1,
             "failed cycle advanced the watermark — rows would be lost")
           val r3 = manager().runCycle()
           require(r3.success, s"retry cycle failed: ${r3.error}")
