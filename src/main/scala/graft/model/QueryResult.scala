@@ -1,15 +1,18 @@
 package graft.model
 
-/** Serving-layer result envelope (reference: QueryResult +
-  * api-service/src/main.py:115-123 / README.md:170-179):
-  * {success, data (row dicts), columns, row_count, execution_time_ms,
-  * cached}. `cached` exists in the reference but is never set true
-  * (query_engine.py:27) — carried for parity.
+import org.apache.spark.sql.Row
+
+/** What a served query produced (reference: QueryResult +
+  * api-service/src/main.py:115-123 / README.md:170-179): the column
+  * names and the collected rows, cell `i` of each row under
+  * `columns(i)`. The HTTP envelope's `success` and `cached` fields are
+  * constants (a result exists only on success, and the reference never
+  * sets `cached` true, query_engine.py:27), so HttpApi writes them as
+  * literals.
   */
 final case class QueryResult(
-    success: Boolean,
-    data: Seq[Map[String, Any]],
     columns: Seq[String],
-    rowCount: Long,
-    executionTimeMs: Double,
-    cached: Boolean = false)
+    rows: IndexedSeq[Row],
+    executionTimeMs: Double) {
+  def rowCount: Long = rows.length.toLong
+}

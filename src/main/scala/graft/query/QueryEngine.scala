@@ -3,6 +3,7 @@ package graft.query
 import java.util.concurrent.{ScheduledThreadPoolExecutor, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.collection.immutable.ArraySeq
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -29,8 +30,11 @@ final class QueryTimeoutException(msg: String)
   * api-service/src/query_engine.py:117-149 + SURVEY.md §3.1):
   *
   *   sanitize → validate (block/allow-list) → snapshot freshness check
-  *   → parse-time read-only guard → spark.sql → row cap → collect →
-  *   envelope
+  *   → parse-time read-only guard → spark.sql → row cap → collect
+  *
+  * The collected rows go back as they are, by position ([[QueryResult]]);
+  * HttpApi writes each cell straight into the JSON envelope, so a row
+  * is converted once.
   *
   * Differences from the reference, both deliberate (SURVEY.md §2.3):
   * the per-pattern `max_rows` caps and read-only enforcement are real
@@ -67,16 +71,11 @@ final class QueryEngine(spark: SparkSession, reader: SnapshotReader,
     val df = session.sql(query)
     val capped = v.maxRows.map(df.limit).getOrElse(df)
 
-    val schema = capped.schema
     val rows = collectWithTimeout(capped, query)
-    val data = rows.toSeq.map(r =>
-      schema.fieldNames.zipWithIndex.map { case (f, i) => f -> r.get(i) }.toMap)
 
     QueryResult(
-      success = true,
-      data = data,
-      columns = schema.fieldNames.toSeq,
-      rowCount = rows.length.toLong,
+      columns = capped.schema.fieldNames.toSeq,
+      rows = ArraySeq.unsafeWrapArray(rows),
       executionTimeMs = (System.nanoTime() - t0) / 1e6)
   }
 

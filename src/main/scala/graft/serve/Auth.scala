@@ -3,8 +3,7 @@ package graft.serve
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 
-import javax.crypto.Mac
-import javax.crypto.spec.SecretKeySpec
+import scala.jdk.CollectionConverters._
 
 /** Authenticated principal with OAuth-style scopes (reference:
   * api-service/src/auth.py:103-120 — space-separated `scope` claim,
@@ -15,9 +14,8 @@ final case class Principal(subject: String, scopes: Set[String]) {
 }
 
 /** Serving-layer authentication boundary (reference V3: Auth0 RS256
-  * JWKS, api-service/src/auth.py:17-100). Kept behind a trait so tests
-  * and offline deployments bypass it — the reference's scheme needs an
-  * outbound JWKS fetch that a hermetic build must not depend on.
+  * JWKS, api-service/src/auth.py:17-100). RsaJwksAuthenticator is the
+  * one verifier; NoAuth stands in for it in tests and open dev runs.
   */
 trait Authenticator {
   /** Returns the principal or a failure message (→ HTTP 401). */
@@ -29,74 +27,6 @@ final class NoAuth(scopes: Set[String] = Set("read:analytics", "read:schema"))
     extends Authenticator {
   def authenticate(h: Option[String]): Either[String, Principal] =
     Right(Principal("anonymous", scopes))
-}
-
-/** Shared JWT claim validation — the reference's claim contract
-  * (auth.py:52-100): exp against the clock, exact aud and iss, scopes
-  * split from the space-separated `scope` claim.
-  */
-private[serve] object JwtClaims {
-  def validate(claims: com.fasterxml.jackson.databind.JsonNode,
-               audience: String, issuer: String,
-               nowEpochS: Long): Either[String, Principal] = {
-    if (claims.has("exp") && claims.get("exp").asLong() < nowEpochS)
-      return Left("Token expired")
-    // aud may be a string OR an array (Auth0 issues both — e.g. the API
-    // audience plus /userinfo); either form must accept when it
-    // contains the expected audience
-    val audOk = claims.path("aud") match {
-      case a if a.isArray =>
-        var found = false
-        a.forEach(n => if (n.asText() == audience) found = true)
-        found
-      case a => a.asText() == audience
-    }
-    if (!audOk)
-      return Left("Invalid audience")
-    if (claims.path("iss").asText() != issuer)
-      return Left("Invalid issuer")
-    val scopes = claims.path("scope").asText("")
-      .split(' ').filter(_.nonEmpty).toSet
-    Right(Principal(claims.path("sub").asText("unknown"), scopes))
-  }
-
-  def bearer(h: Option[String]): Either[String, String] = h match {
-    case Some(v) if v.startsWith("Bearer ") => Right(v.substring(7).trim)
-    case _ => Left("Missing bearer token")
-  }
-}
-
-/** HS256 JWT verification (same claim contract as the reference's RS256
-  * path: exp, aud, iss, scope — auth.py:52-100 — with the asymmetric
-  * JWKS step replaced by a shared-secret MAC so verification works with
-  * zero egress; see RsaJwksAuthenticator for the RS256 form).
-  */
-final class HmacJwtAuthenticator(secret: Array[Byte], audience: String,
-                                 issuer: String,
-                                 clock: () => Long = () => System.currentTimeMillis() / 1000)
-    extends Authenticator {
-
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  def authenticate(h: Option[String]): Either[String, Principal] =
-    JwtClaims.bearer(h).flatMap { token =>
-      token.split('.') match {
-        case Array(h64, p64, s64) =>
-          val mac = Mac.getInstance("HmacSHA256")
-          mac.init(new SecretKeySpec(secret, "HmacSHA256"))
-          val expected = Base64.getUrlEncoder.withoutPadding.encodeToString(
-            mac.doFinal(s"$h64.$p64".getBytes(StandardCharsets.US_ASCII)))
-          if (!java.security.MessageDigest.isEqual(
-            expected.getBytes, s64.getBytes))
-            return Left("Invalid token signature")
-          val header = mapper.readTree(Base64.getUrlDecoder.decode(h64))
-          if (header.path("alg").asText() != "HS256")
-            return Left("Unsupported algorithm")
-          val claims = mapper.readTree(Base64.getUrlDecoder.decode(p64))
-          JwtClaims.validate(claims, audience, issuer, clock())
-        case _ => Left("Malformed token")
-      }
-    }
 }
 
 /** RS256 JWT verification against a JWKS document — the reference's
@@ -172,9 +102,9 @@ final class RsaJwksAuthenticator(jwksSource: () => String, audience: String,
       }
     })
 
-  def authenticate(h: Option[String]): Either[String, Principal] =
-    JwtClaims.bearer(h).flatMap { token =>
-      token.split('.') match {
+  def authenticate(h: Option[String]): Either[String, Principal] = h match {
+    case Some(v) if v.startsWith("Bearer ") =>
+      v.substring(7).trim.split('.') match {
         case Array(h64, p64, s64) =>
           val header = try mapper.readTree(Base64.getUrlDecoder.decode(h64))
           catch { case _: Exception => return Left("Malformed token") }
@@ -194,10 +124,35 @@ final class RsaJwksAuthenticator(jwksSource: () => String, audience: String,
             return Left("Invalid token signature")
           val claims = try mapper.readTree(Base64.getUrlDecoder.decode(p64))
           catch { case _: Exception => return Left("Malformed token") }
-          JwtClaims.validate(claims, audience, issuer, clock())
+          validate(claims)
         case _ => Left("Malformed token")
       }
-    }
+    case _ => Left("Missing bearer token")
+  }
+
+  /** The reference's claim contract (auth.py:52-100): exp against the
+    * clock, exact aud and iss, scopes split from the space-separated
+    * `scope` claim.
+    */
+  private def validate(
+      claims: com.fasterxml.jackson.databind.JsonNode): Either[String, Principal] = {
+    if (claims.has("exp") && claims.get("exp").asLong() < clock())
+      return Left("Token expired")
+    // aud may be a string OR an array (Auth0 issues both — e.g. the API
+    // audience plus /userinfo); either form must accept when it
+    // contains the expected audience
+    val aud = claims.path("aud")
+    val audOk =
+      if (aud.isArray) aud.elements().asScala.exists(_.asText() == audience)
+      else aud.asText() == audience
+    if (!audOk)
+      return Left("Invalid audience")
+    if (claims.path("iss").asText() != issuer)
+      return Left("Invalid issuer")
+    val scopes = claims.path("scope").asText("")
+      .split(' ').filter(_.nonEmpty).toSet
+    Right(Principal(claims.path("sub").asText("unknown"), scopes))
+  }
 }
 
 /** `jwksSource` implementations for [[RsaJwksAuthenticator]]. The
@@ -274,23 +229,5 @@ object RsaJwksAuthenticator {
     signer.initSign(priv)
     signer.update(s"$header.$payload".getBytes(StandardCharsets.US_ASCII))
     s"$header.$payload.${enc.encodeToString(signer.sign())}"
-  }
-}
-
-object HmacJwtAuthenticator {
-  /** Token minting for tests/tools (not a serving concern). */
-  def mint(secret: Array[Byte], audience: String, issuer: String,
-           subject: String, scopes: Seq[String], expEpochS: Long): String = {
-    val enc = Base64.getUrlEncoder.withoutPadding
-    def b64(s: String) = enc.encodeToString(s.getBytes(StandardCharsets.UTF_8))
-    val header = b64("""{"alg":"HS256","typ":"JWT"}""")
-    val payload = b64(
-      s"""{"sub":"$subject","aud":"$audience","iss":"$issuer",""" +
-        s""""scope":"${scopes.mkString(" ")}","exp":$expEpochS}""")
-    val mac = Mac.getInstance("HmacSHA256")
-    mac.init(new SecretKeySpec(secret, "HmacSHA256"))
-    val sig = enc.encodeToString(
-      mac.doFinal(s"$header.$payload".getBytes(StandardCharsets.US_ASCII)))
-    s"$header.$payload.$sig"
   }
 }

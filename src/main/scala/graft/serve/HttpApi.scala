@@ -7,6 +7,7 @@ import java.time.Instant
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.Row
 
 import graft.query.{InvalidQueryException, QueryEngine, RateLimiter}
 
@@ -145,14 +146,14 @@ final class HttpApi(engine: QueryEngine,
           try {
             val r = engine.execute(q)
             val n = mapper.createObjectNode()
-            n.put("success", r.success)
+            n.put("success", true)
             val data = n.putArray("data")
-            r.data.foreach(row => writeRow(data, r.columns, row))
+            r.rows.foreach(row => writeRow(data, r.columns, row))
             val cols = n.putArray("columns")
             r.columns.foreach(cols.add)
             n.put("row_count", r.rowCount)
             n.put("execution_time_ms", r.executionTimeMs)
-            n.put("cached", r.cached)
+            n.put("cached", false)
             (200, n)
           } catch {
             case e: InvalidQueryException => (400, err(e.getMessage))
@@ -164,11 +165,14 @@ final class HttpApi(engine: QueryEngine,
       }
     }
 
-  private def writeRow(arr: ArrayNode, columns: Seq[String],
-                       row: Map[String, Any]): Unit = {
+  /** Cell `i` goes under `columns(i)`; a repeated name keeps its first
+    * position and the last cell's value, as Jackson's `put` replaces.
+    */
+  private def writeRow(arr: ArrayNode, columns: Seq[String], row: Row): Unit = {
     val o = arr.addObject()
-    columns.foreach { c =>
-      row.getOrElse(c, null) match {
+    columns.indices.foreach { i =>
+      val c = columns(i)
+      row.get(i) match {
         case null => o.putNull(c)
         case v: java.lang.Long => o.put(c, v.longValue())
         case v: java.lang.Integer => o.put(c, v.intValue())
@@ -180,6 +184,8 @@ final class HttpApi(engine: QueryEngine,
     }
   }
 
+  // the server has already refused a malformed %-escape (`%zz`, a
+  // trailing `%`) with 400 "Bad request URI", so decoding cannot fail
   private def queryParam(ex: HttpExchange, name: String): Option[String] =
     Option(ex.getRequestURI.getRawQuery).flatMap(_.split('&').collectFirst {
       case kv if kv.takeWhile(_ != '=') == name =>

@@ -14,10 +14,37 @@ import graft.snapshot.{SnapshotReader, SnapshotStore}
   * SYNC_INTERVAL_SECONDS, SNAPSHOT_KEEP_COUNT, RATE_LIMIT_REQUESTS,
   * HTTP_PORT, SOURCE_DIR, SNAPSHOT_DIR. Session (EngineSession):
   * SPARK_GRAFT_MASTER, SPARK_GRAFT_CPUS, SPARK_GRAFT_EXTRA_CONFS.
+  * Auth ([[authenticator]]): AUTH_JWKS_URL or AUTH_JWKS_FILE,
+  * AUTH_AUDIENCE, AUTH_ISSUER.
   */
 object ServeMain {
+
+  /** The RS256/JWKS verifier when a JWKS source is configured —
+    * AUTH_JWKS_URL (outbound HTTPS, the reference's literal Auth0
+    * fetch) wins over AUTH_JWKS_FILE (zero egress) — else NoAuth. The
+    * source is passed as a thunk: an unknown kid re-reads it
+    * (throttled), so rotating keys = republishing the JWKS, no restart.
+    * The retired HS256 secret refuses to boot rather than fall
+    * through to serving unauthenticated.
+    */
+  def authenticator(env: Map[String, String]): Authenticator = {
+    require(!env.contains("AUTH_SECRET"), "AUTH_SECRET (HS256) is no " +
+      "longer supported: publish the RS256 public key as a JWKS document" +
+      " and point AUTH_JWKS_FILE at it (or AUTH_JWKS_URL at an https URL)")
+    val audience = env.getOrElse("AUTH_AUDIENCE", "graft-api")
+    val issuer = env.getOrElse("AUTH_ISSUER", "graft")
+    env.get("AUTH_JWKS_URL").map(JwksSources.https(_))
+      .orElse(env.get("AUTH_JWKS_FILE").map(JwksSources.file))
+      .fold[Authenticator](new NoAuth())(
+        new RsaJwksAuthenticator(_, audience, issuer))
+  }
+
   def main(args: Array[String]): Unit = {
     val cfg = EngineConfig.fromEnv()
+    // before the session starts: a refused auth setup costs no boot
+    val auth = authenticator(sys.env)
+    if (auth.isInstanceOf[NoAuth]) System.err.println(
+      "[serve] WARNING: no AUTH_JWKS_URL/AUTH_JWKS_FILE — serving UNAUTHENTICATED")
     // FAIR (set by EngineSession) shares task slots across QueryEngine's
     // pools, one per HTTP worker thread: concurrent HTTP queries do not
     // queue FIFO behind the largest one (the reference serves through
@@ -30,29 +57,6 @@ object ServeMain {
     val reader = new SnapshotReader(store,
       java.time.Duration.ofSeconds(cfg.refreshTtlSeconds))
     val engine = new QueryEngine(spark, reader)
-    // JWT auth activates when configured — AUTH_JWKS_URL (outbound
-    // HTTPS fetch, the reference's literal Auth0 contract) or
-    // AUTH_JWKS_FILE (zero-egress) selects the RS256/JWKS verifier;
-    // AUTH_SECRET selects HS256. Otherwise the service runs open and
-    // says so loudly — never silently.
-    val audience = sys.env.getOrElse("AUTH_AUDIENCE", "graft-api")
-    val issuer = sys.env.getOrElse("AUTH_ISSUER", "graft")
-    // passed as a thunk: an unknown kid re-reads the source
-    // (throttled), so rotating keys = republishing the JWKS — no
-    // restart needed. AUTH_JWKS_URL (outbound HTTPS, the reference's
-    // literal Auth0 fetch) wins over AUTH_JWKS_FILE (zero-egress).
-    val jwksSource = sys.env.get("AUTH_JWKS_URL").map(JwksSources.https(_))
-      .orElse(sys.env.get("AUTH_JWKS_FILE").map(JwksSources.file))
-    val auth = (jwksSource, sys.env.get("AUTH_SECRET")) match {
-      case (Some(src), _) => new RsaJwksAuthenticator(src, audience, issuer)
-      case (None, Some(secret)) => new HmacJwtAuthenticator(
-        secret.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        audience, issuer)
-      case _ =>
-        System.err.println(
-          "[serve] WARNING: no AUTH_JWKS_URL/AUTH_JWKS_FILE/AUTH_SECRET — serving UNAUTHENTICATED")
-        new NoAuth()
-    }
     val api = new HttpApi(engine,
       auth = auth,
       rateLimiter = new RateLimiter(cfg.rateLimitRequests,

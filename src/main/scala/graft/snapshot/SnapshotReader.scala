@@ -2,7 +2,9 @@ package graft.snapshot
 
 import java.time.{Duration, Instant}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.SparkSession
 
 import graft.model.{MalformedManifest, Manifest}
 
@@ -59,13 +61,11 @@ final class SnapshotReader(store: SnapshotStore,
   @volatile private var served: Option[Served] = None
   @volatile private var loadedAt: Option[Instant] = None
   private def loadedVersion: Option[String] = served.map(_.manifest.version)
-  // cold-boot failed-probe state, for backoff: (at, cause, retryable).
-  // retryable=true → taxonomy failures, replayed as the 503-shaped
-  // SnapshotUnavailableException; false → a bug-shaped fault, replayed
-  // AS ITSELF so it keeps surfacing as a 500 — but still without
-  // re-probing the store inside the window
-  @volatile private var lastColdFailure:
-    Option[(Instant, Throwable, Boolean)] = None
+  // cold-boot failed probe, for backoff: when, and what was thrown —
+  // the 503-shaped SnapshotUnavailableException or a bug-shaped fault
+  // as itself. Inside the window the same throwable is replayed
+  // without re-probing the store
+  @volatile private var lastColdFailure: Option[(Instant, Throwable)] = None
   // test observability: how many times the pointer was actually read
   private[graft] val pointerProbes =
     new java.util.concurrent.atomic.AtomicLong(0)
@@ -94,59 +94,34 @@ final class SnapshotReader(store: SnapshotStore,
     * api-service/src/query_engine.py:98-108; only a loaded snapshot is
     * TTL-cached).
     *
-    * Absent or unreadable pointer while a snapshot IS loaded: keep
-    * serving the loaded generation. The publish pointer swap is
-    * rename-based; on object stores (s3a rename = copy+delete) a
-    * crashed publisher can leave `current/manifest.json` momentarily
-    * absent, and that window must degrade to staleness, never to an
-    * outage — the generation's data and manifest are always complete
-    * before the pointer moves (SnapshotWriter orders them), so the
-    * last-registered views stay valid. The next TTL lapse retries.
-    *
-    * Cold boot with no adoptable snapshot — pointer torn/unreadable OR
-    * simply absent (fresh deployment, first publish pending): retry-
-    * with-backoff, not crash-loop. Each failed probe
-    * raises a typed [[SnapshotUnavailableException]] (the serving layer
-    * maps it to 503 + Retry-After) and arms `coldRetryBackoff`; calls
-    * inside the backoff window replay the cached failure WITHOUT
-    * re-reading the store, so a request storm during the torn window
-    * costs one pointer read per backoff period, not one per request.
-    * The pointer self-heals on the publisher's next cycle; the first
-    * probe after it does loads and serves normally.
-    *
-    * Failure typing is asymmetric by state (r11 ADVICE):
-    *  - WHILE LOADED, any non-fatal refresh failure degrades to serving
-    *    the loaded generation as stale, LOGGED — store clients (Hadoop
-    *    s3a, object-store SDK shims) surface transient faults as
-    *    RuntimeException subclasses no taxonomy can enumerate, and
-    *    flipping a working deployment from "stale for one TTL" to
-    *    "500 per query" over an unrecognized exception class is the
-    *    wrong trade. The log line keeps a genuine bug from hiding: it
-    *    prints every TTL lapse until fixed.
-    *  - COLD, only parse-shaped (MalformedManifest) and IO failures
-    *    map to the retryable 503 — anything else propagates AS ITSELF.
-    *    With nothing loaded there is no safe degraded state, so a bug
-    *    must surface as a bug, not masquerade as "not published yet".
-    *    BOTH arms arm the backoff (r12 ADVICE): the same shim-wrapped
-    *    RuntimeException a store client throws transiently would
-    *    otherwise drive one store probe per request during a cold boot
-    *    — the exact storm the backoff exists to cap. Inside the window
-    *    the cached throwable is replayed without touching the store;
-    *    the response shape (500 vs 503) is unchanged by the cap.
+    * Every failure — unreadable pointer, a probe fault outside the
+    * MalformedManifest/IO taxonomy, a damaged generation behind a valid
+    * pointer, an absent pointer — goes through one state-dependent
+    * policy, `refreshFailed`:
+    *  - WHILE LOADED, keep serving the loaded generation as stale,
+    *    LOGGED. The generation's data and manifest are complete before
+    *    the pointer moves (SnapshotWriter orders them), so its views
+    *    stay valid; a crashed object-store rename (copy+delete) or a
+    *    store-client shim's RuntimeException must degrade to staleness,
+    *    not flip a working deployment to 500 per query. The log line
+    *    prints every TTL lapse, so a genuine bug does not hide.
+    *  - COLD, there is nothing to fall back to: arm `coldRetryBackoff`
+    *    and throw. Unreadable and absent pointers are retryable (a
+    *    running publisher's next cycle writes the pointer) and surface
+    *    as [[SnapshotUnavailableException]] (503 + Retry-After);
+    *    anything else propagates AS ITSELF, so a bug does not
+    *    masquerade as "not published yet". Calls inside the backoff
+    *    window replay the cached throwable without touching the store,
+    *    so a request storm costs one store probe per backoff period,
+    *    not one per request.
     */
   def refreshIfStale(): Boolean = synchronized {
     val now = clock()
     val stale = loadedVersion.isEmpty || loadedAt.forall(t =>
       Duration.between(t, now).compareTo(ttl) >= 0)
     if (!stale) return false
-    if (loadedVersion.isEmpty) lastColdFailure match {
-      case Some((t, e, retryable))
-          if Duration.between(t, now).compareTo(coldRetryBackoff) < 0 =>
-        if (retryable) throw new SnapshotUnavailableException(
-          s"snapshot not yet available (retrying with backoff): " +
-            s"${e.getMessage}", e, retryAfterSeconds)
-        else throw e // a bug replays as a bug — throttled, not re-typed
-      case _ => ()
+    if (loadedVersion.isEmpty) lastColdFailure.foreach { case (t, e) =>
+      if (Duration.between(t, now).compareTo(coldRetryBackoff) < 0) throw e
     }
     loadedAt = Some(now)
     val read = try {
@@ -154,89 +129,64 @@ final class SnapshotReader(store: SnapshotStore,
       store.readCurrentManifest()
     } catch {
       // torn/garbage pointer (a non-rename writer mid-overwrite) or an
-      // IO blip: while loaded, identical to absent; first load has
-      // nothing to fall back to, so surface it — typed, with backoff
+      // IO blip
       case e @ (_: MalformedManifest | _: java.io.IOException) =>
-        if (loadedVersion.nonEmpty) None
-        else {
-          lastColdFailure = Some((now, e, true))
-          throw new SnapshotUnavailableException(
-            s"no snapshot loaded and the publish pointer is unreadable" +
-              s" — transient if a publisher is running (it rewrites the" +
-              s" pointer every cycle): ${e.getMessage}", e,
-            retryAfterSeconds)
-        }
-      // loaded + an exception outside the taxonomy (store-client shims
-      // wrap IO faults in RuntimeExceptions): degrade to stale, loudly
-      // — a genuine bug keeps printing every TTL lapse, but a working
-      // deployment never flips to a 500 storm over a refresh blip
-      case e if loadedVersion.nonEmpty &&
-          scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"[snapshot] WARNING: manifest refresh failed with " +
-            s"${e.getClass.getName}: ${e.getMessage} — continuing to " +
-            s"serve loaded generation ${loadedVersion.get} as stale; " +
-            "if this is not a transient store fault, it is a bug")
-        None
-      // cold + outside the taxonomy: surface the bug AS ITSELF, but arm
-      // the backoff first — a cold boot during a shim-wrapped transient
-      // store fault must not probe the store once per request (the 500s
-      // inside the window are throttled replays of THIS throwable)
-      case e if loadedVersion.isEmpty &&
-          scala.util.control.NonFatal(e) =>
-        lastColdFailure = Some((now, e, false))
-        throw e
+        return refreshFailed(now, e, retryable = true,
+          "the publish pointer is unreadable")
+      // outside the taxonomy: store-client shims wrap IO faults in
+      // RuntimeExceptions, but so does a genuine bug
+      case NonFatal(e) =>
+        return refreshFailed(now, e, retryable = false,
+          "the manifest refresh failed")
     }
     read match {
       case Some(m) if !loadedVersion.contains(m.version) =>
-        // adopting the generation can itself fail — a damaged dir
-        // behind a valid manifest (foreign partial delete; the writer
-        // always completes data before the swap). Same state-dependent
-        // policy as the pointer probe: loaded degrades to serving the
-        // loaded generation as stale, loudly (register is
-        // all-or-nothing, so the catalog still serves it consistently);
-        // cold surfaces the fault as itself but arms the backoff so a
-        // request storm replays it instead of re-reading footers per
-        // request. Either way the publisher's next cycle writes a
-        // fresh generation and the next lapse adopts it.
+        // adopting can fail too — a damaged dir behind a valid manifest
+        // (foreign partial delete; the writer always completes data
+        // before the swap). register is all-or-nothing, so a loaded
+        // generation still serves consistently
         try { register(m); lastColdFailure = None; true }
         catch {
-          case e if loadedVersion.nonEmpty &&
-              scala.util.control.NonFatal(e) =>
-            System.err.println(
-              s"[snapshot] WARNING: generation ${m.version} is " +
-                s"unreadable (${e.getClass.getName}: ${e.getMessage}) — " +
-                s"continuing to serve loaded generation " +
-                s"${loadedVersion.get} as stale; if no foreign writer " +
-                "damaged the store, this is a bug")
-            false
-          case e if loadedVersion.isEmpty &&
-              scala.util.control.NonFatal(e) =>
-            lastColdFailure = Some((now, e, false))
-            throw e
+          case NonFatal(e) => refreshFailed(now, e, retryable = false,
+            s"generation ${m.version} is unreadable")
         }
       case Some(_) =>
         lastColdFailure = None
         false
-      case None if loadedVersion.isEmpty =>
-        // cold + ABSENT pointer (fresh deployment, nothing published
-        // yet): the same retryable-503 policy as the torn window — a
-        // plain `false` here used to let the query proceed into a raw
-        // "table not found" 500 storm with an unthrottled exists()
-        // probe per request. The publisher's FIRST cycle creates the
-        // pointer, so this too is always transient.
-        val e = new SnapshotUnavailableException(
-          "no snapshot published yet — the publish pointer is absent;" +
-            " transient if a publisher is running (its first cycle" +
-            " creates it)", null, retryAfterSeconds)
-        lastColdFailure = Some((now, e, true))
-        throw e
-      case None => false // loaded: absent pointer degrades to staleness
+      // fresh deployment, nothing published yet: the publisher's FIRST
+      // cycle creates the pointer
+      case None => refreshFailed(now,
+        new java.io.FileNotFoundException(store.currentManifestPath.toString),
+        retryable = true, "the publish pointer is absent")
     }
   }
 
-  def table(name: String): DataFrame =
-    session.table(name)
+  /** The one refresh-failure policy. While a generation is loaded: log
+    * and keep serving it as stale (false). Cold: arm the backoff and
+    * throw — a [[SnapshotUnavailableException]] (503) when `retryable`,
+    * else `cause` itself (500).
+    */
+  private def refreshFailed(now: Instant, cause: Throwable,
+                            retryable: Boolean, what: String): Boolean = {
+    loadedVersion match {
+      case Some(v) =>
+        System.err.println(
+          s"[snapshot] WARNING: $what (${cause.getClass.getName}: " +
+            s"${cause.getMessage}) — continuing to serve loaded generation " +
+            s"$v as stale; if neither a transient store fault nor a " +
+            "foreign writer explains it, it is a bug")
+        false
+      case None =>
+        val thrown =
+          if (!retryable) cause
+          else new SnapshotUnavailableException(
+            s"no snapshot loaded and $what — transient if a publisher is " +
+              s"running (its next cycle writes the pointer): " +
+              cause.getMessage, cause, retryAfterSeconds)
+        lastColdFailure = Some((now, thrown))
+        throw thrown
+    }
+  }
 
   private def register(m: Manifest): Unit = {
     // Zero-width swap (round 15; closes the r14-documented limitation):

@@ -42,7 +42,7 @@ object EngineDemo {
     ).foreach { sql =>
       val res = engine.execute(sql)
       println(s"[demo] $sql\n  -> rows=${res.rowCount} cols=${res.columns} " +
-        f"ms=${res.executionTimeMs}%.1f first=${res.data.headOption}")
+        f"ms=${res.executionTimeMs}%.1f first=${res.rows.headOption}")
     }
 
     Seq("DROP TABLE orders", "WITH x AS (SELECT 1) SELECT * FROM x")

@@ -30,16 +30,15 @@ class QueryEngineSpec extends SparkSpec {
 
   test("envelope shape on a valid query") {
     val r = engine.execute("SELECT * FROM inventory ORDER BY id")
-    assert(r.success && r.rowCount == 3)
+    assert(r.rowCount == 3)
     assert(r.columns == Seq("id", "name", "quantity", "price", "updated_at"))
-    assert(r.data.head("name") == "widget")
+    assert(r.rows.head.get(1) == "widget")
     assert(r.executionTimeMs > 0)
-    assert(!r.cached)
   }
 
   test("aggregate query through the whitelist") {
     val r = engine.execute("SELECT SUM(quantity) AS q FROM inventory")
-    assert(r.data.head("q") == 15L)
+    assert(r.rows.head.get(0) == 15L)
   }
 
   test("invalid query → InvalidQueryException (400-class)") {

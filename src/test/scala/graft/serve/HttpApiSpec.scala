@@ -19,7 +19,7 @@ class HttpApiSpec extends SparkSpec {
 
   private val mapper = new ObjectMapper()
   private val http = HttpClient.newHttpClient()
-  private val secret = "test-secret".getBytes
+  private val signer = new TestSigner()
 
   private lazy val api: (HttpApi, Int, StringBuilder) = {
     val srcDir = Files.createTempDirectory("graft-hsrc").toString
@@ -34,7 +34,7 @@ class HttpApiSpec extends SparkSpec {
     val engine = new QueryEngine(spark, new SnapshotReader(store))
     val logs = new StringBuilder
     val a = new HttpApi(engine,
-      auth = new HmacJwtAuthenticator(secret, "graft-api", "graft-test"),
+      auth = signer.auth,
       rateLimiter = new RateLimiter(maxRequests = 1000),
       log = s => logs.synchronized { logs.append(s).append('\n') })
     val port = a.start()
@@ -43,8 +43,7 @@ class HttpApiSpec extends SparkSpec {
 
   private def token(scopes: Seq[String] =
                     Seq("read:analytics", "read:schema")): String =
-    HmacJwtAuthenticator.mint(secret, "graft-api", "graft-test", "tester",
-      scopes, Instant.now().getEpochSecond + 3600)
+    signer.token("tester", scopes)
 
   private def get(path: String, bearer: Option[String]): (Int, String) = {
     val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${api._2}$path"))
@@ -74,6 +73,37 @@ class HttpApiSpec extends SparkSpec {
     assert(!j.get("cached").asBoolean())
   }
 
+  test("the /query envelope: positional cells, repeated names, NULL, DECIMAL, TIMESTAMP") {
+    val (code, body) = get("/query?q=" + java.net.URLEncoder.encode(
+      "SELECT id, id, NULL AS n, CAST(price AS DECIMAL(10,2)) AS d, " +
+        "updated_at FROM inventory ORDER BY id", "UTF-8"), Some(token()))
+    assert(code == 200, body)
+    // a repeated column name is one JSON key, at its first position
+    assert(body.replaceFirst(""""execution_time_ms":[0-9.Ee+-]+""",
+      """"execution_time_ms":0""") ==
+      """{"success":true,"data":[""" +
+      """{"id":1,"n":null,"d":9.99,"updated_at":"2024-01-01 00:00:00.0"},""" +
+      """{"id":2,"n":null,"d":19.50,"updated_at":"2024-01-02 00:00:00.0"}],""" +
+      """"columns":["id","id","n","d","updated_at"],"row_count":2,""" +
+      """"execution_time_ms":0,"cached":false}""")
+  }
+
+  test("a malformed %-escape in q is a 400") {
+    // java.net.URI refuses these, so the request line goes out raw
+    def status(target: String): String = {
+      val s = new java.net.Socket("127.0.0.1", api._2)
+      try {
+        s.getOutputStream.write((s"GET $target HTTP/1.1\r\nHost: x\r\n" +
+          s"Authorization: Bearer ${token()}\r\nConnection: close\r\n\r\n")
+          .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+        new java.io.BufferedReader(new java.io.InputStreamReader(
+          s.getInputStream, java.nio.charset.StandardCharsets.US_ASCII)).readLine()
+      } finally s.close()
+    }
+    assert(status("/query?q=SELECT%zz").startsWith("HTTP/1.1 400"))
+    assert(status("/query?q=SELECT%").startsWith("HTTP/1.1 400"))
+  }
+
   test("blocked SQL → 400; unauthenticated → 401; wrong scope → 403") {
     val (code400, body400) = get(
       "/query?q=" + java.net.URLEncoder.encode("DROP TABLE inventory", "UTF-8"),
@@ -86,12 +116,11 @@ class HttpApiSpec extends SparkSpec {
       Some(token(Seq("read:schema"))))
     assert(code403 == 403)
     val (codeExp, _) = get("/query?q=SELECT%20*%20FROM%20inventory",
-      Some(HmacJwtAuthenticator.mint(secret, "graft-api", "graft-test",
-        "tester", Seq("read:analytics"), Instant.now().getEpochSecond - 10)))
+      Some(signer.token("tester", Seq("read:analytics"),
+        Instant.now().getEpochSecond - 10)))
     assert(codeExp == 401) // expired
     val (codeBadAud, _) = get("/query?q=SELECT%20*%20FROM%20inventory",
-      Some(HmacJwtAuthenticator.mint(secret, "other-api", "graft-test",
-        "tester", Seq("read:analytics"), Instant.now().getEpochSecond + 3600)))
+      Some(signer.token("tester", Seq("read:analytics"), aud = "other-api")))
     assert(codeBadAud == 401)
   }
 

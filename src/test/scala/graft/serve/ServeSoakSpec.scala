@@ -4,7 +4,6 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 import java.sql.Timestamp
-import java.time.Instant
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.LongAdder
 
@@ -37,7 +36,7 @@ class ServeSoakSpec extends SparkSpec {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   private val http = HttpClient.newHttpClient()
-  private val secret = "soak-secret".getBytes
+  private val signer = new TestSigner()
 
   test("sustained mixed load: no 5xx, 429s engage, no starvation, no leaked blocks") {
     val srcDir = Files.createTempDirectory("graft-soak-src").toString
@@ -52,14 +51,12 @@ class ServeSoakSpec extends SparkSpec {
     val engine = new QueryEngine(spark, new SnapshotReader(store))
     // low ceiling so the soak genuinely trips the limiter
     val api = new HttpApi(engine,
-      auth = new HmacJwtAuthenticator(secret, "graft-api", "graft-test"),
+      auth = signer.auth,
       rateLimiter = new RateLimiter(maxRequests = 600, windowSeconds = 60),
       log = _ => ())
     val port = api.start()
 
-    val tok = HmacJwtAuthenticator.mint(secret, "graft-api", "graft-test",
-      "soaker", Seq("read:analytics", "read:schema"),
-      Instant.now().getEpochSecond + 3600)
+    val tok = signer.token("soaker", Seq("read:analytics", "read:schema"))
     def get(path: String, bearer: Option[String] = Some(tok)): Int = {
       val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
       bearer.foreach(t => b.header("Authorization", s"Bearer $t"))

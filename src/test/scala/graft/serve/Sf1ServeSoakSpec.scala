@@ -3,7 +3,6 @@ package graft.serve
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Paths}
-import java.time.Instant
 import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
 import java.util.concurrent.atomic.LongAdder
 
@@ -40,7 +39,7 @@ class Sf1ServeSoakSpec extends SparkSpec {
   private val sf1 = sys.env.getOrElse("GRAFT_SF1_DIR", "localdata/sf1")
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   private val http = HttpClient.newHttpClient()
-  private val secret = "sf1-soak-secret".getBytes
+  private val signer = new TestSigner()
 
   test("serving stays clean under concurrent sf1 catalog pipelines") {
     assume(Files.exists(Paths.get(s"$sf1/orders.parquet")),
@@ -52,13 +51,11 @@ class Sf1ServeSoakSpec extends SparkSpec {
       new ParquetSource(sf1, Seq("orders", "customer")), store).runCycle()
     val engine = new QueryEngine(spark, new SnapshotReader(store))
     val api = new HttpApi(engine,
-      auth = new HmacJwtAuthenticator(secret, "graft-api", "graft-test"),
+      auth = signer.auth,
       rateLimiter = new RateLimiter(maxRequests = 100000, windowSeconds = 60),
       log = _ => ())
     val port = api.start()
-    val tok = HmacJwtAuthenticator.mint(secret, "graft-api", "graft-test",
-      "sf1-soaker", Seq("read:analytics", "read:schema"),
-      Instant.now().getEpochSecond + 3600)
+    val tok = signer.token("sf1-soaker", Seq("read:analytics", "read:schema"))
 
     def q(sql: String): Int = {
       val b = HttpRequest.newBuilder(URI.create(
